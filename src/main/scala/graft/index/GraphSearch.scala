@@ -22,11 +22,11 @@ import org.apache.spark.sql.functions._
   * each hop's expansion is a superset of the current beam and the kept
   * set re-ranks a SUPERSET of what it had — per-query best-k is
   * monotonically non-decreasing across hops (spec-pinned), a fixed hop
-  * budget needs no driver-side convergence poll, and the logical plan
-  * grows LINEARLY in hops (the frontier is referenced once per hop,
-  * never unioned with its own previous plan). Nothing data-sized is
+  * budget needs no driver-side convergence poll, and the frontier is
+  * never unioned with its own previous plan. Nothing data-sized is
   * broadcast; the graph shuffles once on `src` and the exchange is
-  * reused across hops.
+  * reused across hops. One state reference per round;
+  * [[graft.rel.Iterate]] truncates every 2 rounds.
   */
 object GraphSearch {
 
@@ -83,7 +83,21 @@ object GraphSearch {
       rounds: Int): DataFrame = {
     require(k >= 1 && beam >= k, s"need beam >= k >= 1, got k=$k beam=$beam")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val q = queries.select(col("query_id"), col("qvec"))
+    val frontier = graft.rel.Iterate.rounds(
+      scored(queries, nodes, seeds.select("query_id", "vec_id").distinct()), rounds)(
+      step(queries, graph, nodes, beam))
+    graft.vector.TopK.perQueryDistinct(frontier, k)
+      .select(col("query_id"), col("vec_id"), col("rank").as("rnk"), col("dist2"))
+  }
+
+  /** One hop over the beam `(query_id, vec_id, dist2)`: expand through
+    * the symmetrized edge list plus self-loops, re-score, keep the best
+    * `beam` per query. */
+  private[graft] def step(
+      queries: DataFrame,
+      graph: DataFrame,
+      nodes: DataFrame,
+      beam: Int): (DataFrame, Int) => DataFrame = {
     val e = graph.select("src", "dst")
     // no distinct: a (a,b)+(b,a) reciprocal pair yields a duplicate edge
     // here, but the per-hop beam cut dedupes candidate ids anyway — the
@@ -104,10 +118,9 @@ object GraphSearch {
     // Exchange nodes even with a localCheckpoint every second hop, and
     // Catalyst re-analysis of those trees was measured at ~7 s per hop
     // at 10×) — while the self-loop form grows the plan LINEARLY in
-    // rounds, so the per-hop truncation below hands AQE one small flat
-    // segment per hop and the und/emb/broadcast-q exchanges are reused
-    // instead of re-materializing the frontier-union lineage per
-    // checkpoint job.
+    // rounds, so each truncated span hands AQE one small flat segment
+    // and the und/emb/broadcast-q exchanges are reused instead of
+    // re-materializing the frontier-union lineage per checkpoint job.
     // Result-identical: candidates per hop are beam ∪ N(beam) either
     // way, every copy re-scores to the same dist2 under the
     // deterministic kernel, and the id-deduping bounded heap keeps the
@@ -117,52 +130,34 @@ object GraphSearch {
         .unionByName(nodes.select(col("vec_id").as("src"), col("vec_id").as("dst")))
         .repartition(col("src"))
         .cache())
-    val emb = nodes.select(col("vec_id"), col("embedding"))
-    def scored(cands: DataFrame): DataFrame =
-      cands
-        .join(emb, "vec_id")
-        .join(broadcast(q), "query_id")
-        .select(
-          col("query_id"),
-          col("vec_id"),
-          graft.vector.VectorOps.l2Sq(col("embedding"), col("qvec")).as("dist2"))
-    var frontier = scored(seeds.select("query_id", "vec_id").distinct())
-    var i = 0
-    while (i < rounds) {
+    // Per-hop shape (round 15 — the walk is the graph family's suite
+    // constant): expansion duplicates are RE-SCORED rather than
+    // anti-joined away (the distance kernel is deterministic, so every
+    // copy carries the same dist2), and the beam cut is the id-deduping
+    // bounded-heap aggregator — ONE map-side-combining aggregation per
+    // hop in place of three all-row wide ops (distinct + left_anti +
+    // window), the same O(queries·beam) shuffle bound with two fewer
+    // exchanges. Re-scored arithmetic is O(dup·beam·deg) rows per
+    // query — bounded, and cheaper than the joins it replaces.
+    (frontier, _) => {
       val expanded = frontier
         .select(col("query_id"), col("vec_id").as("src"))
         .join(und, "src")
         .select(col("query_id"), col("dst").as("vec_id"))
-      // Per-hop shape (round 15 — the walk is the graph family's suite
-      // constant): expansion duplicates are RE-SCORED rather than
-      // anti-joined away (the distance kernel is deterministic, so every
-      // copy carries the same dist2), and the beam cut is the id-deduping
-      // bounded-heap aggregator — ONE map-side-combining aggregation per
-      // hop in place of three all-row wide ops (distinct + left_anti +
-      // window), the same O(queries·beam) shuffle bound with two fewer
-      // exchanges. Re-scored arithmetic is O(dup·beam·deg) rows per
-      // query — bounded, and cheaper than the joins it replaces.
-      frontier = graft.vector.TopK
-        .perQueryDistinct(scored(expanded), beam)
+      graft.vector.TopK
+        .perQueryDistinct(scored(queries, nodes, expanded), beam)
         .select("query_id", "vec_id", "dist2")
-      i += 1
-      // Every-2nd-hop truncation: each segment is a small flat AQE
-      // query (2 linear hops ≈ 25 plan nodes), so the driver never
-      // re-optimizes a rounds-deep plan after every stage
-      // materialization — measured on v35 at sf0.1: no truncation spent
-      // ~22 s of a 29 s wall in the driver with executors idle (29.2 s
-      // total); per-hop truncation ran 9-11 s; every-2nd-hop measured
-      // best (4.1 s, min of 3) — half the checkpoint jobs at still-tiny
-      // segments. (The OLD every-2nd-hop form at 23.7 s carried the
-      // exponential frontier-union lineage inside each segment; the
-      // cadence is cheap only because the self-loop form made segments
-      // linear.) EAGER deliberately: eager=false measured the same wall
-      // but the hop RDDs then compute after their query execution is
-      // unreachable, and every task logs a DAGScheduler stack trace for
-      // the GC'd SQL-metric accumulators (~300 stderr lines per walk).
-      if (i % 2 == 0 && i < rounds) frontier = frontier.localCheckpoint()
     }
-    graft.vector.TopK.perQueryDistinct(frontier, k)
-      .select(col("query_id"), col("vec_id"), col("rank").as("rnk"), col("dist2"))
   }
+
+  /** `cands(query_id, vec_id)` with each candidate's exact `dist2` to its
+    * query. */
+  private def scored(queries: DataFrame, nodes: DataFrame, cands: DataFrame): DataFrame =
+    cands
+      .join(nodes.select(col("vec_id"), col("embedding")), "vec_id")
+      .join(broadcast(queries.select(col("query_id"), col("qvec"))), "query_id")
+      .select(
+        col("query_id"),
+        col("vec_id"),
+        graft.vector.VectorOps.l2Sq(col("embedding"), col("qvec")).as("dist2"))
 }

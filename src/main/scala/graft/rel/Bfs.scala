@@ -12,13 +12,13 @@ import org.apache.spark.sql.functions._
   * frontier, so ANY engine replaying the schedule produces the identical
   * labeling, and the oracle does (unrolled CTEs).
   *
-  * Per round the plan is one equality join of edges against the (shrinking)
-  * frontier on `src`, a distinct on the found set, and an anti-join
-  * against the labels so far — node-key shuffles only, nothing data-sized
-  * broadcast (the [[PageRank]] plan rule); lineage truncates on the same
-  * cadence. The labels table is referenced once per round (the anti-join)
-  * and the frontier once (the edge join), so an uncheckpointed span of r
-  * rounds is a 2^r-leaf plan like [[KCore]]'s — the cadence bounds it.
+  * Per round the plan is one equality join of the `(node, dist)` state
+  * against the edge list plus one self-loop per node, and one min-`dist`
+  * aggregate on the node key — node-key shuffles only, nothing data-sized
+  * broadcast (the [[PageRank]] plan rule). Only the round's frontier
+  * (`dist = i`) expands through real edges; the self-loops carry every
+  * label forward. One state reference per round; [[Iterate]] truncates
+  * every 2 rounds.
   */
 object Bfs {
 
@@ -27,39 +27,29 @@ object Bfs {
     * ignored). Returns one row per node: `(node, dist)` with `dist` the
     * hop distance from the nearest seed, or −1 if not reached within
     * `maxHops` (the "outside this crawl horizon" certificate). */
-  def run(
-      nodes: DataFrame,
-      edges: DataFrame,
-      seeds: DataFrame,
-      maxHops: Int,
-      checkpointEvery: Int = 4): DataFrame = {
+  def run(nodes: DataFrame, edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be non-negative, got $maxHops")
-    require(checkpointEvery > 0, s"checkpointEvery must be positive, got $checkpointEvery")
-    val e = edges.select(col("src"), col("dst"))
-    var labels = nodes.select(col("node"))
-      .join(seeds.select(col("node")).distinct(), Seq("node"), "left_semi")
-      .select(col("node"), lit(0).as("dist"))
-    var frontier = labels.select("node")
-    var i = 0
-    while (i < maxHops) {
-      val found = e
-        .join(frontier.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-        .select(col("dst").as("node"))
-        .distinct()
-        .join(labels.select("node"), Seq("node"), "left_anti")
-        // stay closed over the node set (edges may point outside it)
-        .join(nodes.select("node"), Seq("node"), "left_semi")
-        .select(col("node"), lit(i + 1).as("dist"))
-      labels = labels.unionByName(found)
-      frontier = found.select("node")
-      i += 1
-      if (i % checkpointEvery == 0 && i < maxHops) {
-        labels = labels.localCheckpoint()
-        frontier = frontier.localCheckpoint()
-      }
-    }
-    nodes.select(col("node"))
-      .join(labels, Seq("node"), "left")
+    val init = nodes.select(col("node"))
+      .join(seeds.select(col("node")).distinct().withColumn("dist", lit(0)), Seq("node"), "left")
+    Iterate.rounds(init, maxHops)(step(nodes, edges))
       .select(col("node"), coalesce(col("dist"), lit(-1)).as("dist"))
+  }
+
+  /** One round over the state `(node, dist)`: every node, `dist` null
+    * while unreached. Round `i` labels the out-neighbors of the `dist = i`
+    * frontier with `i + 1` unless they already hold a smaller label. */
+  private[graft] def step(nodes: DataFrame, edges: DataFrame): (DataFrame, Int) => DataFrame = {
+    val ns = nodes.select(col("node"))
+    // real edges (hop 1) stay closed over the node set; the self-loops
+    // (hop 0) carry each node's label into the next round's aggregate
+    val adj = edges.select(col("src"), col("dst"), lit(1).as("hop"))
+      .join(ns.select(col("node").as("dst")), Seq("dst"), "left_semi")
+      .unionByName(ns.select(col("node").as("src"), col("node").as("dst"), lit(0).as("hop")))
+    (state, i) =>
+      state.select(col("node").as("src"), col("dist"))
+        .join(adj, "src")
+        .filter(col("hop") === 0 || col("dist") === i)
+        .groupBy(col("dst").as("node"))
+        .agg(min(col("dist") + col("hop")).as("dist"))
   }
 }

@@ -14,10 +14,11 @@ import org.apache.spark.sql.functions._
   * round budget needs no driver-side convergence poll: extra rounds are
   * no-ops and the emitted `converged` flag (min over survivors of
   * in-core-degree ≥ k — a one-row aggregate, free) certifies the budget
-  * sufficed. Per round the cost is two semi-joins of edges against the
-  * survivor set plus one degree aggregate — equality shuffles on the node
-  * key only, nothing data-sized broadcast, no windows; lineage truncates
-  * on the [[PageRank]] cadence (semantics-free, spec-pinned).
+  * sufficed. Per round the cost is one degree frame: the half-edges join
+  * the survivor set once on the neighbor key and one aggregate on the
+  * node key counts each node's surviving neighbors — equality shuffles
+  * on the node key only, nothing data-sized broadcast, no windows. One
+  * state reference per round; [[Iterate]] truncates every 2 rounds.
   */
 object KCore {
 
@@ -27,62 +28,51 @@ object KCore {
     * `cdeg` the node's degree WITHIN the survivor set and `converged` =
     * 1 on every row iff no survivor sits below k (the fixpoint
     * certificate — always 1 when `rounds` covers the peel depth). */
-  def decompose(
-      edges: DataFrame,
-      k: Int,
-      rounds: Int,
-      checkpointEvery: Int = 2): DataFrame = {
+  def decompose(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 0, s"rounds must be non-negative, got $rounds")
-    require(checkpointEvery > 0, s"checkpointEvery must be positive, got $checkpointEvery")
-    // Deliberately NOT cached: the canonical edge list is referenced
-    // twice per round, but within each checkpoint span the references
-    // are identical subtrees and AQE's ReuseExchange serves them from
-    // one execution — measured on p19 at sf0.1, a cache() here made the
-    // query SLOWER (7.8 → 9.2 s, tasks 58 → 1294: every round pays a
-    // 32-partition columnar-cache scan + deserialize where the reused
-    // broadcast exchange was nearly free). checkpointEvery default
-    // 4 → 2: at 4 the measured p19 wall was ~2/3 DRIVER time (45 jobs,
-    // 58 tasks, 2.4 s stageWall of 7.75 s) — Catalyst analysis of
-    // 16-leaf spans; 4-leaf spans cost 2 more checkpoint jobs and
-    // ~nothing else.
-    val canon = Triangles.canonical(edges)
-    def degreesWithin(live: DataFrame): DataFrame = {
-      val alive = canon
-        .join(live.select(col("node").as("u")), Seq("u"), "left_semi")
-        .join(live.select(col("node").as("v")), Seq("v"), "left_semi")
-      // explode, not unionAll(alive, alive): each round's plan references
-      // `live` twice (the semi-joins), not four times — an uncheckpointed
-      // span of r rounds is a 2^r-leaf plan instead of 4^r, which is the
-      // difference between the analyzer finishing and not at the default
-      // cadence (2^4 per span vs 4^4·…)
-      alive.select(explode(array(col("u"), col("v"))).as("node"))
-        .groupBy("node")
-        .agg(count(lit(1)).as("cdeg"))
-    }
-    var live = canon.select(col("u").as("node"))
-      .unionAll(canon.select(col("v").as("node")))
-      .distinct()
-    var i = 0
-    while (i < rounds) {
-      live = degreesWithin(live).filter(col("cdeg") >= k).select("node")
-      i += 1
-      if (i % checkpointEvery == 0 && i < rounds) live = live.localCheckpoint()
-    }
-    // truncate the last span before the final assembly: `fin` references
-    // `live` three times (the left join + degreesWithin's two semi-joins)
-    // and the crossJoin below references `fin` twice — without this the
-    // final action re-analyzes the last span's tree up to 6×
+    // Deliberately NOT cached: measured on p19 at sf0.1, a cache() of
+    // the edge list made the query SLOWER (7.8 → 9.2 s, tasks 58 → 1294:
+    // every round pays a 32-partition columnar-cache scan + deserialize
+    // where the reused exchange was nearly free).
+    val halves = halfEdges(edges)
+    var live = Iterate.rounds(halves.select("node").distinct(), rounds)(step(halves, k))
+    // the assembly references the survivor set three times (the left
+    // join, the degree frame, and through `fin` the flag's crossJoin),
+    // so the last span is truncated once before it
     if (rounds > 0) live = live.localCheckpoint()
-    // left join, not the bare degree agg: a survivor whose last neighbor
-    // died in the final round has NO edge row — it must surface as cdeg 0
-    // (and fail the flag), not vanish from the output
+    // left join, not the bare degree frame: a survivor whose last
+    // neighbor died in the final round has NO live neighbor row — it must
+    // surface as cdeg 0 (and fail the flag), not vanish from the output
     val fin = live
-      .join(degreesWithin(live), Seq("node"), "left")
+      .join(degreesWithin(halves, live), Seq("node"), "left")
       .select(col("node"), coalesce(col("cdeg"), lit(0L)).as("cdeg"))
     fin.crossJoin(
       fin.agg(
         coalesce(min(when(col("cdeg") >= k, 1L).otherwise(0L)), lit(1L))
           .as("converged")))
   }
+
+  /** `(node, nbr)`: both directions of every canonical edge, from one
+    * pass over the canonical edge list. */
+  private[graft] def halfEdges(edges: DataFrame): DataFrame = {
+    def half(node: String, nbr: String) = struct(col(node).as("node"), col(nbr).as("nbr"))
+    Triangles.canonical(edges)
+      .select(explode(array(half("u", "v"), half("v", "u"))).as("h"))
+      .select("h.*")
+  }
+
+  /** One peel superstep over the survivor set `live(node)`. No own-alive
+    * check is needed: the survivor set only shrinks, so a node peeled
+    * earlier had fewer than k live neighbors then and has no more now. */
+  private[graft] def step(halves: DataFrame, k: Int): (DataFrame, Int) => DataFrame =
+    (live, _) => degreesWithin(halves, live).filter(col("cdeg") >= k).select("node")
+
+  /** `(node, cdeg)`: for every node with a neighbor in `live`, how many
+    * of its neighbors are live. */
+  private def degreesWithin(halves: DataFrame, live: DataFrame): DataFrame =
+    halves
+      .join(live.select(col("node").as("nbr")), "nbr")
+      .groupBy("node")
+      .agg(count(lit(1)).as("cdeg"))
 }

@@ -24,9 +24,8 @@ import org.apache.spark.sql.functions._
   * aggregate incoming shares (one shuffle on dst), left-join back to
   * the node set. At 100 TB scale the edge table is the only big operand
   * and it is shuffled ON ITS JOIN KEY once per side per step — the same
-  * cost shape as every BSP graph engine's superstep; `localCheckpoint`
-  * every few iterations cuts lineage, which changes nothing
-  * semantically (pinned in PageRankSpec).
+  * cost shape as every BSP graph engine's superstep. One state reference
+  * per round; [[Iterate]] truncates every 2 rounds.
   */
 object PageRank {
 
@@ -35,50 +34,18 @@ object PageRank {
     * a uniform start of `unit` per node. Dangling nodes (no out-edges)
     * simply retain no outgoing mass — the damping base keeps their rank
     * positive; nodes with no in-edges converge to the base. */
-  def run(
-      nodes: DataFrame,
-      edges: DataFrame,
-      iters: Int,
-      unit: Long,
-      checkpointEvery: Int = 4): DataFrame = {
+  def run(nodes: DataFrame, edges: DataFrame, iters: Int, unit: Long): DataFrame = {
     require(iters >= 0 && unit > 0 && unit % 20 == 0,
       s"unit must be positive and divisible by 20 for an exact damping base (got $unit)")
-    require(checkpointEvery > 0, s"checkpointEvery must be positive, got $checkpointEvery")
     // Entry-time overflow bound for the `85 * incoming` step: integer
     // floors only ever LOSE mass, so at every superstep
     // incoming ≤ Σ ranks ≤ |V|·unit — one BigInt check here proves all
     // `iters` supersteps stay inside Long. Costs one count of the node
     // table (O(|V|) once, vs `iters` full superstep shuffles).
-    val nV = nodes.count()
-    require(
-      BigInt(85) * nV * unit <= BigInt(Long.MaxValue),
-      s"85 * |V| * unit overflows Long ($nV nodes at unit $unit) — choose a smaller unit")
+    requireNoOverflow(nodes, unit)
     val base = 3L * (unit / 20L) // = 0.15·unit, exact since 20 | unit
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    var ranks = nodes.select(col("node"), lit(unit).as("r"))
-    var i = 0
-    while (i < iters) {
-      val incoming = ranks
-        // hint-free on purpose: deg is |V|-sized data, not metadata — see
-        // the plan-shape note above; PlanAuditSpec pins the absence of a
-        // broadcast hint in the superstep loop
-        .join(deg, ranks("node") === deg("src"))
-        .select(col("src"), expr("r div deg").as("share"))
-        .join(edges, "src")
-        .groupBy("dst")
-        .agg(sum("share").as("incoming"))
-      ranks = nodes
-        .join(incoming.withColumnRenamed("dst", "node"), Seq("node"), "left")
-        .na.fill(0L, Seq("incoming"))
-        .select(col("node"), (lit(base) + expr("(85 * incoming) div 100")).as("r"))
-      i += 1
-      // truncate lineage every few supersteps — values are unchanged, but
-      // without this the k-th iteration re-plans a k-deep join tree
-      // (quadratic planning cost; at real graph sizes, also re-execution
-      // risk on failure)
-      if (i % checkpointEvery == 0 && i < iters) ranks = ranks.localCheckpoint()
-    }
-    ranks
+    Iterate.rounds(nodes.select(col("node"), lit(unit).as("r")), iters)(
+      step(nodes.select(col("node"), lit(base).as("base")), edges))
   }
 
   /** PERSONALIZED PageRank (random walk with restart): the teleport mass
@@ -95,50 +62,54 @@ object PageRank {
     * [[run]] overflow bound `85·|V|·unit ≤ Long.Max` covers every
     * superstep here too (total circulating mass ≤ |S|·unit ≤ |V|·unit).
     * Non-seed nodes unreachable from any seed converge to exactly 0 —
-    * the "not in this community" certificate. Plan shape per superstep
-    * is [[run]]'s verbatim (hint-free degree join, exchange-reused; the
-    * loop body is kept textually separate because p16's full-hash oracle
-    * pins run()'s output and this variant must not perturb it). */
+    * the "not in this community" certificate. The superstep is [[run]]'s
+    * (hint-free degree join, exchange-reused); only the per-node base
+    * differs. */
   def personalized(
       nodes: DataFrame,
       edges: DataFrame,
       seeds: DataFrame,
       iters: Int,
-      unit: Long,
-      checkpointEvery: Int = 4): DataFrame = {
+      unit: Long): DataFrame = {
     require(iters >= 0 && unit > 0 && unit % 20 == 0,
       s"unit must be positive and divisible by 20 for an exact teleport base (got $unit)")
-    require(checkpointEvery > 0, s"checkpointEvery must be positive, got $checkpointEvery")
+    requireNoOverflow(nodes, unit)
+    val base = 3L * (unit / 20L)
+    val isSeed = nodes
+      .join(seeds.select(col("node")).distinct().withColumn("is_seed", lit(1L)), Seq("node"), "left")
+      .select(col("node"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))
+    // per-node teleport: base on seeds, 0 elsewhere — |V|-sized, joined
+    // hint-free exactly like the degree table (same scale rationale)
+    Iterate.rounds(isSeed.select(col("node"), (col("is_seed") * unit).as("r")), iters)(
+      step(isSeed.select(col("node"), (col("is_seed") * base).as("base")), edges))
+  }
+
+  private def requireNoOverflow(nodes: DataFrame, unit: Long): Unit = {
     val nV = nodes.count()
     require(
       BigInt(85) * nV * unit <= BigInt(Long.MaxValue),
       s"85 * |V| * unit overflows Long ($nV nodes at unit $unit) — choose a smaller unit")
-    val base = 3L * (unit / 20L)
-    val seedSet = seeds.select(col("node")).distinct()
-    // per-node teleport: base on seeds, 0 elsewhere — |V|-sized, joined
-    // hint-free exactly like the degree table (same scale rationale)
-    val baseDf = nodes
-      .join(seedSet.withColumn("is_seed", lit(1L)), Seq("node"), "left")
-      .select(col("node"), (coalesce(col("is_seed"), lit(0L)) * base).as("base"))
+  }
+
+  /** One superstep over the state `(node, r)`: `r' = base + (85 · Σ_in
+    * (r_u div deg_u)) div 100`, with `teleport(node, base)` naming each
+    * node's base. */
+  private[graft] def step(teleport: DataFrame, edges: DataFrame): (DataFrame, Int) => DataFrame = {
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    var ranks = nodes
-      .join(seedSet.withColumn("is_seed", lit(1L)), Seq("node"), "left")
-      .select(col("node"), (coalesce(col("is_seed"), lit(0L)) * unit).as("r"))
-    var i = 0
-    while (i < iters) {
+    (ranks, _) => {
       val incoming = ranks
+        // hint-free on purpose: deg is |V|-sized data, not metadata — see
+        // the plan-shape note above; PlanAuditSpec pins the absence of a
+        // broadcast hint in the superstep loop
         .join(deg, ranks("node") === deg("src"))
         .select(col("src"), expr("r div deg").as("share"))
         .join(edges, "src")
         .groupBy("dst")
         .agg(sum("share").as("incoming"))
-      ranks = baseDf
+      teleport
         .join(incoming.withColumnRenamed("dst", "node"), Seq("node"), "left")
         .na.fill(0L, Seq("incoming"))
         .select(col("node"), (col("base") + expr("(85 * incoming) div 100")).as("r"))
-      i += 1
-      if (i % checkpointEvery == 0 && i < iters) ranks = ranks.localCheckpoint()
     }
-    ranks
   }
 }

@@ -263,6 +263,46 @@ class PlanAuditSpec extends SparkSpec {
       s"a superstep join forces broadcast of a data-sized relation:\n$opt")
   }
 
+  test("iterative operators reference their state once per round — truncated spans stay linear") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    // a step that references its state twice doubles the plan per round:
+    // the span between two truncations would be a 2^r-leaf tree
+    def stateRefs(step: (DataFrame, Int) => DataFrame, state: DataFrame): Int = {
+      val cp = state.localCheckpoint()
+      val leaf = cp.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+      step(cp, 0).queryExecution.analyzed.collect { case l: LogicalRDD if l.rdd eq leaf => l }.size
+    }
+    val nodes = (0L to 9L).toDF("node")
+    val edges = (0L to 9L)
+      .flatMap(n => Seq(1L, 2L).map(i => (n, (n * 3 + i * 7) % 10)))
+      .toDF("src", "dst")
+    val vecs = (0L to 9L).map(n => (n, Array(n.toFloat, 1f))).toDF("vec_id", "embedding")
+    val queries = Seq((0L, Array(2f, 1f))).toDF("query_id", "qvec")
+    CacheScope.scoped {
+      val steps = Seq(
+        "Bfs" -> stateRefs(
+          graft.rel.Bfs.step(nodes, edges),
+          Seq((0L, Option(0)), (1L, Option.empty[Int])).toDF("node", "dist")),
+        "KCore" -> stateRefs(
+          graft.rel.KCore.step(graft.rel.KCore.halfEdges(edges), 2),
+          nodes),
+        "LabelProp" -> stateRefs(
+          graft.rel.LabelProp.step(nodes, Seq((0L, 1L)).toDF("node", "label"), edges),
+          Seq((0L, Option(1L)), (1L, Option.empty[Long])).toDF("node", "label")),
+        "PageRank (run and personalized)" -> stateRefs(
+          graft.rel.PageRank.step(nodes.withColumn("base", lit(150L)), edges),
+          nodes.withColumn("r", lit(1000L))),
+        "GraphSearch" -> stateRefs(
+          graft.index.GraphSearch.step(queries, edges, vecs, beam = 4),
+          Seq((0L, 0L, 4f)).toDF("query_id", "vec_id", "dist2")))
+      steps.foreach { case (op, n) =>
+        assert(n == 1, s"$op's step references its state $n times per round")
+      }
+    }
+  }
+
   test("knn graph ivf path: no nodes×nodes crossJoin — candidates come only from probed cells") {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet").select("vec_id", "embedding")
     val model = IvfBuild.build(emb, 64)

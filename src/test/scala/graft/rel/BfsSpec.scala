@@ -6,10 +6,8 @@ import org.apache.spark.sql.functions._
 class BfsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def bfs(nodes: Seq[Long], edges: Seq[(Long, Long)], seeds: Seq[Long],
-      hops: Int, ce: Int = 4) =
-    Bfs.run(nodes.toDF("node"), edges.toDF("src", "dst"), seeds.toDF("node"),
-      maxHops = hops, checkpointEvery = ce)
+  private def bfs(nodes: Seq[Long], edges: Seq[(Long, Long)], seeds: Seq[Long], hops: Int) =
+    Bfs.run(nodes.toDF("node"), edges.toDF("src", "dst"), seeds.toDF("node"), maxHops = hops)
       .as[(Long, Int)].collect().toMap
 
   test("chain distances are exact; the horizon cuts at maxHops with -1 beyond") {
@@ -35,7 +33,13 @@ class BfsSpec extends SparkSpec {
     assert(bfs(nodes, edges, Seq(1L), hops = 3) == Map(1L -> 0, 2L -> 1, 3L -> -1))
     val ns = (0L to 19L).toSeq
     val es = ns.flatMap(n => Seq(1L, 2L).map(i => (n, (n * 3 + i * 7) % 20)))
-    val runs = Seq(1, 4, 9).map(ce => bfs(ns, es, Seq(0L), hops = 8, ce = ce))
-    assert(runs.tail.forall(_ == runs.head), "cadence changed a BFS label")
+    // 8 hops truncate lineage after hops 2, 4 and 6: the labels must equal
+    // a driver-side replay of the same frontier recurrence
+    var dist = Map(0L -> 0)
+    (0 until 8).foreach { i =>
+      dist ++= es.collect { case (s, d) if dist.get(s).contains(i) && !dist.contains(d) => d -> (i + 1) }
+    }
+    assert(bfs(ns, es, Seq(0L), hops = 8) == ns.map(n => n -> dist.getOrElse(n, -1)).toMap,
+      "truncation changed a BFS label")
   }
 }

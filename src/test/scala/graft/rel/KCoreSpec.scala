@@ -6,10 +6,26 @@ import org.apache.spark.sql.functions._
 class KCoreSpec extends SparkSpec {
   import spark.implicits._
 
-  private def core(edges: Seq[(Long, Long)], k: Int, rounds: Int, ce: Int = 4) =
-    KCore.decompose(edges.toDF("src", "dst"), k, rounds, checkpointEvery = ce)
+  private def core(edges: Seq[(Long, Long)], k: Int, rounds: Int) =
+    KCore.decompose(edges.toDF("src", "dst"), k, rounds)
       .select(col("node"), col("cdeg"), col("converged"))
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+
+  /** Driver-side replay of the same peel recurrence. */
+  private def refCore(edges: Seq[(Long, Long)], k: Int, rounds: Int) = {
+    val canon = edges.collect { case (a, b) if a != b => (a min b, a max b) }.distinct
+    def degrees(live: Set[Long]) =
+      canon.collect { case (u, v) if live(u) && live(v) => Seq(u, v) }.flatten
+        .groupBy(identity).map { case (n, hits) => n -> hits.size.toLong }
+    var live = canon.flatMap { case (u, v) => Seq(u, v) }.toSet
+    (1 to rounds).foreach { _ =>
+      val d = degrees(live)
+      live = live.filter(n => d.getOrElse(n, 0L) >= k)
+    }
+    val d = degrees(live)
+    val converged = if (live.forall(n => d.getOrElse(n, 0L) >= k)) 1L else 0L
+    live.toSeq.sorted.map(n => (n, d.getOrElse(n, 0L), converged))
+  }
 
   test("triangle survives the 2-core, pendant and isolated chain peel away") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L), (5L, 6L))
@@ -31,13 +47,9 @@ class KCoreSpec extends SparkSpec {
     val want = (1L to 5L).map(n => (n, 4L, 1L))
     assert(core(k5, k = 4, rounds = 2) == want)
     assert(core(k5, k = 4, rounds = 6) == want, "extra rounds changed a fixpoint")
-    // each round references `live` twice (the two semi-joins), so an
-    // UNCHECKPOINTED span doubles the plan tree per round — keep the
-    // cadence-free variant's span small (2^7 subtree copies) instead of
-    // letting the lineage grow past what the analyzer can hold; the
-    // production default (4) bounds the span by construction
-    assert(core(k5, k = 4, rounds = 6, ce = 1) == want)
-    assert(core(k5, k = 4, rounds = 6, ce = 7) == want)
+    // 6 rounds truncate lineage after rounds 2 and 4: the survivors must
+    // equal a driver-side replay of the same peel
+    assert(core(k5, k = 4, rounds = 6) == refCore(k5, k = 4, rounds = 6))
   }
 
   test("direction, duplication, and self-loops do not change the core") {

@@ -42,18 +42,22 @@ class LabelPropSpec extends SparkSpec {
     assert(m5 == m2, s"fixed point drifted: $m5 vs $m2")
   }
 
-  test("lineage-truncation cadence is semantics-free: checkpointEvery 1, 4, iters+1 agree exactly") {
-    val nodes = (0L to 19L).toDF("node")
-    val seeds = (0L to 3L).map(n => (n, n % 2)).toDF("node", "label")
-    val edges = (0L to 19L)
-      .flatMap(n => Seq(1L, 2L).map(i => (n, (n * 3 + i * 7) % 20)))
-      .toDF("src", "dst")
+  test("lineage truncation is semantics-free: 5 supersteps match a driver-side replay exactly") {
+    val ns = 0L to 19L
+    val sd = (0L to 3L).map(n => n -> n % 2).toMap
+    val es = ns.flatMap(n => Seq(1L, 2L).map(i => (n, (n * 3 + i * 7) % 20)))
     val iters = 5
-    val runs = Seq(1, 4, iters + 1).map(ce =>
-      ce -> labels(LabelProp.run(nodes, seeds, edges, iters, checkpointEvery = ce)))
-    val (_, ref) = runs.head
-    runs.tail.foreach { case (ce, m) =>
-      assert(m == ref, s"checkpointEvery=$ce diverged: $m vs $ref")
+    // 5 supersteps truncate after steps 2 and 4; the driver-side replay
+    // runs the same vote recurrence with no plan at all
+    var ref: Map[Long, Option[Long]] = ns.map(n => n -> sd.get(n)).toMap
+    (1 to iters).foreach { _ =>
+      val votes = es.flatMap { case (s, d) => ref(s).map(l => (d, l)) }.groupBy(identity)
+      val pick = votes.toSeq.groupBy(_._1._1).map { case (d, vs) =>
+        d -> -vs.map { case ((_, l), hits) => (hits.size, -l) }.max._2
+      }
+      ref = ns.map(n => n -> sd.get(n).orElse(pick.get(n)).orElse(ref(n))).toMap
     }
+    val m = labels(LabelProp.run(ns.toDF("node"), sd.toSeq.toDF("node", "label"), es.toDF("src", "dst"), iters))
+    assert(m == ref, s"truncated run diverged from the driver-side replay: $m vs $ref")
   }
 }

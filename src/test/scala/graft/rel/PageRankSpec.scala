@@ -9,6 +9,18 @@ class PageRankSpec extends SparkSpec {
   private val unit = 1000000000000L
   private val base = 3L * (unit / 20L)
 
+  /** Driver-side replay of the integer recurrence: `unit` start and `base`
+    * teleport on `seeds`, 0 elsewhere. */
+  private def refRanks(nodes: Seq[Long], edges: Seq[(Long, Long)], seeds: Set[Long], iters: Int) = {
+    val deg = edges.groupBy(_._1).map { case (s, out) => s -> out.size.toLong }
+    var r = nodes.map(n => n -> (if (seeds(n)) unit else 0L)).toMap
+    (1 to iters).foreach { _ =>
+      val incoming = edges.groupBy(_._2).map { case (d, in) => d -> in.map { case (s, _) => r(s) / deg(s) }.sum }
+      r = nodes.map(n => n -> ((if (seeds(n)) base else 0L) + 85L * incoming.getOrElse(n, 0L) / 100L)).toMap
+    }
+    r
+  }
+
   test("two-node cycle: symmetry is preserved exactly and ranks follow the damping recurrence") {
     val nodes = Seq(1L, 2L).toDF("node")
     val edges = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
@@ -37,23 +49,17 @@ class PageRankSpec extends SparkSpec {
     assert((1L to 5L).forall(i => m(6L) > m(i)), s"sink did not accumulate rank: $m")
   }
 
-  test("lineage-truncation cadence is semantics-free: checkpointEvery 1, 4, iters+1 agree bit-for-bit") {
-    // the one iterative-join operator: localCheckpoint placement must
-    // never change a rank (it only truncates the plan), so every cadence
-    // — per-step, the default, and never — replays identical Longs
-    val nodes = (0L to 9L).toDF("node")
-    val edges = (0L to 9L)
-      .flatMap(n => Seq(1L, 2L, 3L).map(i => (n, (n * 7 + i * 13) % 10)))
-      .toDF("src", "dst")
+  test("lineage truncation is semantics-free: 5 supersteps match a driver-side replay bit-for-bit") {
+    // localCheckpoint placement must never change a rank (it only
+    // truncates the plan): 5 supersteps truncate after steps 2 and 4 and
+    // must replay the driver-side recurrence's identical Longs
+    val ns = 0L to 9L
+    val es = ns.flatMap(n => Seq(1L, 2L, 3L).map(i => (n, (n * 7 + i * 13) % 10)))
     val iters = 5
-    val runs = Seq(1, 4, iters + 1).map { ce =>
-      ce -> PageRank.run(nodes, edges, iters, unit, checkpointEvery = ce)
-        .as[(Long, Long)].collect().toMap
-    }
-    val (_, ref) = runs.head
-    runs.tail.foreach { case (ce, m) =>
-      assert(m == ref, s"checkpointEvery=$ce diverged from checkpointEvery=1: $m vs $ref")
-    }
+    val m = PageRank.run(ns.toDF("node"), es.toDF("src", "dst"), iters, unit)
+      .as[(Long, Long)].collect().toMap
+    val ref = refRanks(ns, es, ns.toSet, iters)
+    assert(m == ref, s"truncated run diverged from the driver-side replay: $m vs $ref")
   }
 
   test("entry-time overflow guard rejects |V|*unit combinations that could overflow 85*incoming") {
@@ -95,16 +101,12 @@ class PageRankSpec extends SparkSpec {
     (1 to 5).foreach(_ => r = base + (85L * r) / 100L)
     assert(m(1L) == r, s"seed rank ${m(1L)} disagrees with the exact recurrence $r")
     assert(m(2L) == 0L)
-    // checkpoint cadence parity on a real-ish graph
-    val ns = (0L to 9L).toDF("node")
-    val es = (0L to 9L)
-      .flatMap(n => Seq(1L, 2L, 3L).map(i => (n, (n * 7 + i * 13) % 10)))
-      .toDF("src", "dst")
-    val sd = Seq(0L, 5L).toDF("node")
-    val runs = Seq(1, 4, 7).map { ce =>
-      PageRank.personalized(ns, es, sd, iters = 6, unit = unit, checkpointEvery = ce)
-        .as[(Long, Long)].collect().toMap
-    }
-    assert(runs.tail.forall(_ == runs.head), "cadence changed a personalized rank")
+    // truncation parity on a real-ish graph: 6 supersteps truncate after
+    // steps 2 and 4 and must equal the driver-side replay
+    val ns = 0L to 9L
+    val es = ns.flatMap(n => Seq(1L, 2L, 3L).map(i => (n, (n * 7 + i * 13) % 10)))
+    val got = PageRank.personalized(ns.toDF("node"), es.toDF("src", "dst"), Seq(0L, 5L).toDF("node"),
+      iters = 6, unit = unit).as[(Long, Long)].collect().toMap
+    assert(got == refRanks(ns, es, Set(0L, 5L), iters = 6), "truncation changed a personalized rank")
   }
 }
