@@ -1,8 +1,12 @@
 package graft.index
 
-import graft.vector.{VectorMean, VectorOps}
-import org.apache.spark.sql.DataFrame
+import graft.vector.VectorOps
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Online mutation, micro-batch flavored (reference does row-at-a-time
   * method calls, quake_min.py:92-125; Spark semantics are preserved at
@@ -11,11 +15,16 @@ import org.apache.spark.sql.functions._
   * Inserts route through the two-level centroid hierarchy exactly like the
   * reference (coarse argmin → base argmin within the cell's routing list,
   * quake_min.py:93-104, including the empty-cell → new partition branch,
-  * quake_min.py:96-102). Routing is pure broadcast-join + `min_by` — no
-  * UDF, so the plan stays inside whole-stage codegen. Deletes are
-  * anti-joins — unknown ids are naturally no-ops (quake_min.py:113).
-  * Touched partitions get their centroid recomputed as the exact mean of
-  * remaining members, matching `np.mean` recompute (quake_min.py:108, 122).
+  * quake_min.py:96-102). Routing is map-side: each batch row takes both
+  * argmins against broadcast centroid tables in one shuffle-free pass,
+  * and the routed batch is materialized once as a batch-sized leaf.
+  * Deletes are anti-joins — unknown ids are naturally no-ops
+  * (quake_min.py:113). Touched partitions get their centroid recomputed as
+  * the exact mean of their members, matching `np.mean` recompute
+  * (quake_min.py:108, 122), by one shuffle-free scan that sums only the
+  * touched partitions; every other partition keeps its metadata verbatim.
+  * A write therefore costs O(batch + touched partitions), not a
+  * corpus-wide aggregation.
   */
 object IvfMutate {
 
@@ -29,52 +38,71 @@ object IvfMutate {
     * numbered densely from `partitions.length` in cell order, so the
     * pid-equals-index invariant of [[IvfModel.partitions]] always holds.
     *
-    * @param adds `(vec_id long, embedding array<float>)`, ids fresh. */
+    * @param adds `(vec_id long, embedding array<float>)`, ids fresh (a
+    *             repeated id is inserted once per row). */
   def insert(model: IvfModel, adds: DataFrame): IvfModel = {
     val spark = adds.sparkSession
-    import spark.implicits._
+    val sc = spark.sparkContext
 
     val clean = adds
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
       .filter(VectorOps.hasDim(col("embedding"), model.dim))
 
-    // Broadcast centroid tables (metadata-sized even at 100 TB).
-    val coarseDf = model.coarseCentroids.zipWithIndex.toSeq
-      .map { case (c, i) => (i.toLong, c.toSeq) }
-      .toDF("coarse_id", "ccent")
-    // Routing list per the reference's CoarseCell.base_ids (split-born
-    // siblings are deliberately absent — quake_min.py:183-184 quirk).
-    val routesDf = model.coarseBaseIds.toSeq
-      .flatMap { case (c, pids) => pids.map(p => (c, p, model.partitions(p.toInt).centroid.toSeq)) }
-      .toDF("coarse_id", "pid", "pcent")
+    // Broadcast centroid tables (metadata-sized even at 100 TB). Routing
+    // list per the reference's CoarseCell.base_ids (split-born siblings are
+    // deliberately absent — quake_min.py:183-184 quirk).
+    val coarseB = sc.broadcast(model.coarseCentroids)
+    val routesB = sc.broadcast(Array.tabulate(model.coarseCentroids.length) { c =>
+      model.coarseBaseIds.getOrElse(c.toLong, Vector.empty)
+        .map(p => (p, model.partitions(p.toInt).centroid)).toArray
+    })
+    // pid0 is NULL for a cell with an empty routing list (new-partition branch).
+    val leafSchema = StructType(Seq(
+      StructField("vec_id", LongType),
+      clean.schema("embedding"),
+      StructField("coarse_id", LongType, nullable = false),
+      StructField("pid0", LongType)))
 
-    // Stage 1: nearest coarse cell (ties → lowest id, like np.argmin).
-    val withCell = clean
-      .crossJoin(broadcast(coarseDf))
-      .withColumn("cd", VectorOps.l2Sq(col("embedding"), col("ccent")))
-      .groupBy("vec_id")
-      .agg(
-        any_value(col("embedding")).as("embedding"),
-        min_by(col("coarse_id"), struct(col("cd"), col("coarse_id"))).as("coarse_id"))
-
-    // Stage 2: nearest base partition within the cell's routing list; cells
-    // with an empty routing list get a NULL pid here (new-partition branch).
-    val routed = withCell
-      .join(broadcast(routesDf), Seq("coarse_id"), "left")
-      .withColumn("pd", when(col("pid").isNotNull, VectorOps.l2Sq(col("embedding"), col("pcent"))))
-      .groupBy("vec_id")
-      .agg(
-        any_value(col("embedding")).as("embedding"),
-        any_value(col("coarse_id")).as("coarse_id"),
-        min_by(col("pid"), struct(col("pd"), col("pid"))).as("pid0"))
-      .cache()
+    // One pass per batch row: nearest coarse cell, then nearest base
+    // partition in that cell's routing list. `L2Squared`'s arithmetic
+    // (double accumulation in index order); ties → lowest id, like
+    // np.argmin (routing lists are not sorted by pid).
+    val routed = clean.queryExecution.toRdd.mapPartitions { rows =>
+      val cents = coarseB.value
+      val routes = routesB.value
+      val proj = UnsafeProjection.create(leafSchema)
+      rows.map { r =>
+        val emb = r.getArray(1)
+        val v = emb.toFloatArray()
+        var cell = 0
+        var best = Double.PositiveInfinity
+        var c = 0
+        while (c < cents.length) {
+          val d = l2Sq(v, cents(c))
+          if (d < best) { best = d; cell = c }
+          c += 1
+        }
+        var pid0 = -1L
+        best = Double.PositiveInfinity
+        routes(cell).foreach { case (pid, cent) =>
+          val d = l2Sq(v, cent)
+          if (pid0 < 0 || d < best || (d == best && pid < pid0)) { best = d; pid0 = pid }
+        }
+        val id = if (r.isNullAt(0)) null else r.getLong(0)
+        proj(InternalRow(id, emb, cell.toLong, if (pid0 < 0) null else pid0)).copy(): InternalRow
+      }
+    }
+    // Materialized by the route-pair job below; the stats and the caller's
+    // checkpoint then read these blocks instead of re-routing.
+    routed.localCheckpoint()
 
     // ONE driver collect serves both routing outcomes: the distinct
     // (cell, pid) pairs are bounded by the number of partitions a batch
     // touches, and from them the driver derives the empty-cell set AND the
-    // touched-pid set without a second job over `routed`.
-    val routePairs = routed.select("coarse_id", "pid0").distinct().collect()
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
+    // touched-pid set.
+    val routePairs: Array[(Long, Option[Long])] = routed
+      .mapPartitions(_.map(r => (r.getLong(2), if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet.iterator)
+      .collect().distinct
     // Dense pids for empty cells that actually received vectors this batch.
     val hitEmptyCells = routePairs.collect { case (c, None) => c }.distinct.sorted
     val newPidFor: Map[Long, Long] =
@@ -83,20 +111,19 @@ object IvfMutate {
       if (newPidFor.isEmpty) col("pid0")
       else coalesce(col("pid0"), try_element_at(typedLit(newPidFor), col("coarse_id")))
 
-    val newRows = routed
+    val newRows = GraftSqlBridge.internalCreateDataFrame(spark, routed, leafSchema)
       .withColumn("partition_id", pidExpr)
       .select("vec_id", "embedding", "partition_id")
 
     // No full-table cache here: the union's parent is the caller's cached /
-    // checkpointed table and `newRows` is batch-sized, so re-deriving the
-    // union per consumer is one cheap concat — whereas materializing an
-    // InMemoryRelation copies the ENTIRE collection every mutation epoch
-    // (at index scale, a non-starter). Long-lived callers bound the union
-    // chain with [[checkpoint]].
+    // checkpointed table and `newRows` is a projection of the materialized
+    // batch, so re-deriving the union per consumer is one cheap concat —
+    // whereas materializing an InMemoryRelation copies the ENTIRE
+    // collection every mutation epoch (at index scale, a non-starter).
+    // Long-lived callers bound the union chain with [[checkpoint]].
     val newVectors = model.vectors.unionByName(newRows)
     val touched = routePairs.map { case (c, p) => p.getOrElse(newPidFor(c)) }.toSet
-    val updated = recomputeStats(newVectors, touched)
-    routed.unpersist()
+    val updated = partitionStats(newVectors, touched)
 
     // Existing partitions refreshed; brand-new partitions appended in pid order.
     val existing = model.partitions.map { p =>
@@ -143,26 +170,34 @@ object IvfMutate {
     // side is batch-sized (broadcast) and its parent is the caller's
     // cached / checkpointed table, so re-deriving per consumer beats
     // materializing a full-collection InMemoryRelation every epoch.
-    val newVectors = model.vectors.join(del, Seq("vec_id"), "left_anti")
+    val newVectors = model.vectors.join(broadcast(del), Seq("vec_id"), "left_anti")
 
-    // ONE full-group aggregation serves both "which partitions lost rows"
-    // and "their exact recomputed (mean, count)": deletes only shrink
-    // partitions, so touched = { pid | post-delete count != stored size }
-    // (absent = emptied = husk). This replaces the former semi-join
-    // touched-scan + filtered recompute — two full passes over the
-    // collection — with a single partial-aggregated pass whose output is
-    // metadata-sized (one row per live partition) at any scale. Untouched
-    // partitions keep their stored centroid verbatim: only partitions whose
-    // membership changed get the reference's exact np.mean recompute
-    // (quake_min.py:108,122), so no float-summation drift is introduced
-    // elsewhere.
-    val after = recomputeStats(newVectors, model.partitions.map(_.pid).toSet)
-    val touched = model.partitions.filter(p => after.get(p.pid).map(_._2).getOrElse(0L) != p.size)
+    // The touched partitions come from the batch, not from the corpus: the
+    // ids go to the driver once (as any broadcast side does) and ship as
+    // one broadcast set; a map-side semi-join over the table keeps only the
+    // `partition_id` of each deleted row, so the collect is batch-sized.
+    // The exact (mean, count) recompute then sums the surviving members of
+    // those partitions only. Untouched partitions keep their stored
+    // centroid verbatim — only partitions whose membership changed get the
+    // reference's exact np.mean recompute (quake_min.py:108,122), so no
+    // float-summation drift is introduced elsewhere.
+    val gone = del.collect().iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet
+    if (gone.isEmpty) return model
+    val goneB = model.vectors.sparkSession.sparkContext.broadcast(gone)
+    val schema = model.vectors.schema
+    val vidIdx = schema.fieldIndex("vec_id")
+    val pidIdx = schema.fieldIndex("partition_id")
+    val touched = model.vectors.queryExecution.toRdd
+      .mapPartitions { rows =>
+        val g = goneB.value
+        rows.filter(r => !r.isNullAt(vidIdx) && g.contains(r.getLong(vidIdx))).map(_.getLong(pidIdx))
+      }
+      .collect().toSet
     if (touched.isEmpty) return model
 
-    val touchedPids = touched.map(_.pid).toSet
+    val after = partitionStats(model.vectors, touched, Some(goneB))
     val parts = model.partitions.map { p =>
-      if (!touchedPids.contains(p.pid)) p
+      if (!touched.contains(p.pid)) p
       else
         after.get(p.pid) match {
           case Some((c, n)) => p.copy(centroid = c, size = n)
@@ -172,16 +207,58 @@ object IvfMutate {
     model.copy(vectors = newVectors, partitions = parts)
   }
 
-  /** Exact (mean, count) recompute for the touched partitions only — one
-    * partial-aggregated job over the filtered table. */
-  private def recomputeStats(vectors: DataFrame, touched: Set[Long]): Map[Long, (Array[Float], Long)] = {
-    if (touched.isEmpty) return Map.empty
-    vectors
-      .filter(col("partition_id").isInCollection(touched))
-      .groupBy("partition_id")
-      .agg(VectorMean.fn(col("embedding")).as("centroid"), count(lit(1)).as("n"))
+  /** Exact (mean, count) of the requested partitions: one shuffle-free job
+    * over `vectors` (the shape of [[IvfSearch.scanTopKLocal]]). Each map
+    * partition sums the members of `pids` straight from the InternalRow
+    * into double arrays; the driver merges the partials and casts
+    * `sum / n` to float — `VectorMean`'s arithmetic. Rows whose id is in
+    * `gone` count as deleted. A requested partition with no members is
+    * absent from the result. */
+  private def partitionStats(
+      vectors: DataFrame,
+      pids: Set[Long],
+      gone: Option[Broadcast[Set[Long]]] = None): Map[Long, (Array[Float], Long)] = {
+    if (pids.isEmpty) return Map.empty
+    val schema = vectors.schema
+    val vidIdx = schema.fieldIndex("vec_id")
+    val embIdx = schema.fieldIndex("embedding")
+    val pidIdx = schema.fieldIndex("partition_id")
+    val partials = vectors.queryExecution.toRdd
+      .mapPartitions { rows =>
+        val skip = gone.map(_.value).getOrElse(Set.empty[Long])
+        val acc = scala.collection.mutable.HashMap.empty[Long, (Array[Double], Array[Long])]
+        rows.foreach { r =>
+          if (!r.isNullAt(pidIdx) && !r.isNullAt(embIdx) && pids.contains(r.getLong(pidIdx)) &&
+              (r.isNullAt(vidIdx) || !skip.contains(r.getLong(vidIdx)))) {
+            val a = r.getArray(embIdx)
+            val (s, n) = acc.getOrElseUpdate(r.getLong(pidIdx), (new Array[Double](a.numElements()), Array(0L)))
+            var i = 0
+            while (i < s.length) { s(i) += a.getFloat(i); i += 1 }
+            n(0) += 1
+          }
+        }
+        Iterator.single(acc.toArray)
+      }
       .collect()
-      .map(r => r.getLong(0) -> (r.getSeq[Float](1).toArray, r.getLong(2)))
-      .toMap
+    val total = scala.collection.mutable.HashMap.empty[Long, (Array[Double], Long)]
+    partials.foreach(_.foreach { case (pid, (s, n)) =>
+      total.get(pid) match {
+        case None => total(pid) = (s, n(0))
+        case Some((t, m)) =>
+          var i = 0
+          while (i < t.length) { t(i) += s(i); i += 1 }
+          total(pid) = (t, m + n(0))
+      }
+    })
+    total.map { case (pid, (s, n)) => pid -> (s.map(x => (x / n).toFloat), n) }.toMap
+  }
+
+  /** Squared L2 with `L2Squared`'s arithmetic: float differences widened
+    * to double, accumulated in index order. */
+  private def l2Sq(a: Array[Float], b: Array[Float]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < a.length) { val d = a(i).toDouble - b(i); s += d * d; i += 1 }
+    s
   }
 }

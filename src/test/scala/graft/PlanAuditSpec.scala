@@ -1,6 +1,6 @@
 package graft
 
-import graft.index.{IvfBuild, IvfSearch}
+import graft.index.{IvfBuild, IvfMutate, IvfSearch}
 import org.apache.spark.sql.functions._
 
 /** Physical-plan audits for the properties the 100 TB story depends on —
@@ -54,6 +54,24 @@ class PlanAuditSpec extends SparkSpec {
       s"top-k is not the typed aggregator (no map-side partial selection):\n$plan")
     assert(!plan.contains("Window"),
       s"top-k fell back to a window — every candidate row would shuffle:\n$plan")
+  }
+
+  test("IVF writes return a batch-sized plan — insert and delete vectors carry no shuffle and no aggregate") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet").select("vec_id", "embedding")
+    val model = IvfBuild.build(emb, 64)
+    val inserted = IvfMutate.insert(model, Seq((900000L, Seq.fill(64)(0.1f))).toDF("vec_id", "embedding"))
+    val deleted = IvfMutate.delete(model, Seq(3L, 4L).toDF("vec_id"))
+    // The caller's checkpoint and mirror refresh consume these plans: a
+    // shuffle or an aggregate here re-derives the routing or the stats per
+    // consumer. Broadcasts of the batch-sized side are expected.
+    Seq("insert" -> inserted.vectors, "delete" -> deleted.vectors).foreach { case (op, vectors) =>
+      vectors.collect()
+      val aggs = vectors.queryExecution.optimizedPlan.collect { case a: Aggregate => a }
+      assert(aggs.isEmpty, s"$op's vectors plan aggregates:\n${vectors.queryExecution.optimizedPlan}")
+      assert(countShuffles(vectors) == 0, s"$op's vectors plan shuffles:\n${vectors.queryExecution.executedPlan}")
+    }
   }
 
   test("hot-shingle guard is a broadcast anti-join on the hot set, not a shuffle rejoin") {

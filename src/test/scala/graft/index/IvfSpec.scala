@@ -133,6 +133,168 @@ class IvfSpec extends SparkSpec {
     assert(!res.select("vec_id").as[Long].collect().contains(3L))
   }
 
+  /** (pid, vec_id, embedding) of every row of a model's vectors table. */
+  private def membersOf(m: IvfModel): Map[Long, Seq[(Long, Array[Float])]] =
+    m.vectors.select("partition_id", "vec_id", "embedding").as[(Long, Long, Seq[Float])].collect()
+      .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3.toArray)).toSeq).toMap
+
+  /** Touched partitions match a driver-side replay over their members (size
+    * = member count, centroid = float cast of the double-accumulated mean,
+    * within 1 ulp since summation order follows partitioning); every other
+    * partition keeps its centroid values and size exactly. */
+  private def assertStatsExact(before: IvfModel, after: IvfModel, touched: Set[Long]): Unit = {
+    val members = membersOf(after)
+    after.partitions.foreach { p =>
+      val ms = members.getOrElse(p.pid, Seq.empty)
+      if (touched.contains(p.pid)) {
+        assert(p.size == ms.length, s"pid ${p.pid}: size ${p.size} != ${ms.length} members")
+        if (ms.nonEmpty) {
+          val sum = new Array[Double](after.dim)
+          ms.foreach { case (_, v) => v.indices.foreach(i => sum(i) += v(i)) }
+          sum.indices.foreach { i =>
+            val want = (sum(i) / ms.length).toFloat
+            assert(math.abs(p.centroid(i) - want) <= math.ulp(want), s"pid ${p.pid} dim $i: ${p.centroid(i)} vs $want")
+          }
+        } else {
+          val old = before.partitions(p.pid.toInt)
+          assert(p.centroid.toSeq == old.centroid.toSeq, s"husk ${p.pid} must keep its last centroid")
+        }
+      } else {
+        val old = before.partitions(p.pid.toInt)
+        assert(p.size == old.size && p.centroid.toSeq == old.centroid.toSeq, s"untouched pid ${p.pid} changed")
+        assert(p.size == ms.length, s"untouched pid ${p.pid}: size ${p.size} != ${ms.length} members")
+      }
+    }
+  }
+
+  test("insert and delete keep touched centroids and sizes exact; untouched partitions keep theirs") {
+    // an empty routing list on one coarse cell exercises the new-partition branch
+    val emptied = model.coarseBaseIds.keys.min
+    val m0 = model.copy(coarseBaseIds = model.coarseBaseIds.updated(emptied, Vector.empty))
+    val rng = new scala.util.Random(11)
+    val near = emb.select("embedding").as[Seq[Float]].collect().take(12).zipWithIndex.map { case (v, i) =>
+      (500000L + i, v.map(x => x + 0.01f * rng.nextGaussian().toFloat))
+    }
+    val adds = (near :+ ((600000L, model.coarseCentroids(emptied.toInt).toSeq))).toSeq.toDF("vec_id", "embedding")
+    val m1 = IvfMutate.insert(m0, adds)
+    assert(m1.partitions.length == m0.partitions.length + 1, "one new partition for the emptied cell")
+    val insertedPids = m1.vectors.filter(col("vec_id") >= 500000L).select("partition_id").as[Long].collect().toSet
+    assert(insertedPids.contains(m0.partitions.length.toLong))
+    assertStatsExact(m0, m1, insertedPids)
+
+    // delete: every member of the smallest partition (it becomes a husk),
+    // one member of another, an inserted row and an unknown id
+    val members = membersOf(m1)
+    val victim = m1.partitions.filter(_.size > 0).minBy(_.size).pid
+    val other = m1.partitions.find(p => p.pid != victim && p.size > 1).get.pid
+    val dels = members(victim).map(_._1) ++ Seq(members(other).head._1, 600000L, 987654321L)
+    val m2 = IvfMutate.delete(m1, dels.toDF("vec_id"))
+    val deletedPids = members.collect { case (pid, ms) if ms.exists(r => dels.contains(r._1)) => pid }.toSet
+    assert(m2.partitions(victim.toInt).size == 0L, "emptied partition stays as a husk")
+    assert(m2.partitions.length == m1.partitions.length)
+    assertStatsExact(m1, m2, deletedPids)
+  }
+
+  test("insert routing equals a driver-side two-level argmin (ties → lowest id, empty cells, wrong dim)") {
+    // 2-d toy index: cell 0 routes to pids [1, 0] (unsorted, so a tie is
+    // decided by id, not list order), cell 1 to [2], cells 2 and 3 are empty
+    val vs = Seq(
+      (1L, Seq(-1f, 0f), 0L), (2L, Seq(-1f, 0f), 0L),
+      (3L, Seq(1f, 0f), 1L),
+      (4L, Seq(10f, 0f), 2L))
+    val toy = IvfModel(
+      dim = 2,
+      vectors = vs.toDF("vec_id", "embedding", "partition_id"),
+      coarseCentroids = Array(Array(0f, 0f), Array(10f, 0f), Array(0f, 10f), Array(0f, -10f)),
+      coarseBaseIds = Map(0L -> Vector(1L, 0L), 1L -> Vector(2L), 2L -> Vector.empty),
+      partitions = Vector(
+        PartitionMeta(0L, 0L, Array(-1f, 0f), 2L, 0L, 0L),
+        PartitionMeta(1L, 0L, Array(1f, 0f), 1L, 0L, 0L),
+        PartitionMeta(2L, 1L, Array(10f, 0f), 1L, 0L, 0L)),
+      queryCounter = 0L)
+    val batch = Seq(
+      (10L, Seq(5f, 0f)),      // equidistant from coarse 0 and 1 → cell 0, then pid 1
+      (11L, Seq(0f, 0.5f)),    // cell 0, equidistant from pids 0 and 1 → pid 0
+      (12L, Seq(0f, -9f)),     // empty cell 3, listed before cell 2's row
+      (13L, Seq(1f, 9f)),      // empty cell 2
+      (14L, Seq(9f, 1f)),      // cell 1 → pid 2
+      (15L, Seq(0f, -11f)),    // empty cell 3 again: same new pid
+      (16L, Seq(1f, 2f, 3f)))  // wrong dimension: dropped
+    val m2 = IvfMutate.insert(toy, batch.toDF("vec_id", "embedding"))
+
+    def l2(a: Seq[Float], b: Array[Float]): Double =
+      a.indices.foldLeft(0.0) { (s, i) => val d = a(i).toDouble - b(i); s + d * d }
+    /** Driver-side replay: coarse argmin, then base argmin in the cell's
+      * routing list (ties → lowest id); empty cells get dense new pids. */
+    def replay(m: IvfModel, rows: Seq[(Long, Seq[Float])]): Map[Long, Long] = {
+      val routes = rows.filter(_._2.length == m.dim).map { case (id, v) =>
+        val cell = m.coarseCentroids.indices.minBy(c => (l2(v, m.coarseCentroids(c)), c)).toLong
+        val pids = m.coarseBaseIds.getOrElse(cell, Vector.empty)
+        id -> (cell, if (pids.isEmpty) None else Some(pids.minBy(p => (l2(v, m.partitions(p.toInt).centroid), p))))
+      }
+      val newPid = routes.collect { case (_, (c, None)) => c }.distinct.sorted.zipWithIndex
+        .map { case (c, i) => c -> (m.partitions.length + i).toLong }.toMap
+      routes.map { case (id, (c, p)) => id -> p.getOrElse(newPid(c)) }.toMap
+    }
+    def routedPids(m: IvfModel, from: Long): Map[Long, Long] =
+      m.vectors.filter(col("vec_id") >= from).select("vec_id", "partition_id").as[(Long, Long)].collect().toMap
+
+    val want = replay(toy, batch)
+    assert(routedPids(m2, 10L) == want)
+    // the crafted cases hold the properties they were built for
+    assert(want == Map(10L -> 1L, 11L -> 0L, 12L -> 4L, 13L -> 3L, 14L -> 2L, 15L -> 4L))
+    assert(m2.partitions.map(p => (p.pid, p.coarseId, p.size)) ==
+      Vector((0L, 0L, 3L), (1L, 0L, 2L), (2L, 1L, 2L), (3L, 2L, 1L), (4L, 3L, 2L)))
+    assert(m2.coarseBaseIds == Map(0L -> Vector(1L, 0L), 1L -> Vector(2L), 2L -> Vector(3L), 3L -> Vector(4L)))
+
+    // the fixture index: scaled copies of its members route as the replay does
+    val scaled = emb.select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toSeq
+      .map { case (id, v) => (800000L + id, v.map(_ * 1.05f)) }
+    assert(routedPids(IvfMutate.insert(model, scaled.toDF("vec_id", "embedding")), 800000L) == replay(model, scaled))
+  }
+
+  /** Spark jobs started by `body` on this thread (and the threads it
+    * spawns), counted by a listener keyed on a local property. A sentinel
+    * job drains the listener bus: events of one queue arrive in order. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.jobTag"
+    val tag = s"jobs-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val out = try body finally sc.setLocalProperty(key, s"$tag-end")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(s"$tag-end") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(s"$tag-end"), "listener bus did not drain")
+      (out, seen.toArray.count(_ == tag))
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a write costs the batch: insert + checkpoint and delete + checkpoint stay within their job budgets") {
+    // Budgets are the counts the batch-sized write path runs (they repeat
+    // run to run); the corpus-wide aggregation it replaced ran 12 jobs for
+    // insert + checkpoint and 5 for delete + checkpoint on this fixture.
+    val adds = Seq((700000L, Seq.fill(64)(0.2f)), (700001L, Seq.fill(64)(-0.2f))).toDF("vec_id", "embedding")
+    val base = IvfMutate.checkpoint(model)
+    val (m1, insertJobs) = jobsOf(IvfMutate.checkpoint(IvfMutate.insert(base, adds)))
+    val (m2, deleteJobs) = jobsOf(IvfMutate.checkpoint(IvfMutate.delete(m1, Seq(700000L, 3L).toDF("vec_id"))))
+    info(s"insert + checkpoint: $insertJobs jobs; delete + checkpoint: $deleteJobs jobs")
+    assert(m2.totalVectors == model.totalVectors)
+    assert(insertJobs <= 3, s"insert + checkpoint ran $insertJobs jobs")
+    assert(deleteJobs <= 4, s"delete + checkpoint ran $deleteJobs jobs")
+  }
+
   test("split threshold clamps to [split/1.5, split*2] with the reference hotness quirk (O13)") {
     val s = 3000L
     // zero hotness -> raw = split_size
