@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.vector.{KMeans, VectorMean, VectorOps}
+import graft.vector.{KMeans, VectorOps, VectorSums}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * level 2 runs ALL cells in one distributed job per iteration rather than
   * a per-cell loop, so build cost is O(iters) scans however many cells
   * exist. Per-partition centroids are then recomputed as the exact mean of
-  * final members (the reference does the same, quake_min.py:85), partial
-  * aggregation via [[graft.vector.VectorMean]].
+  * final members (the reference does the same, quake_min.py:85) by one
+  * shuffle-free [[graft.vector.VectorSums]] pass.
   *
   * Empty level-2 clusters are skipped, matching quake_min.py:82 — pids are
   * dense over non-empty partitions only.
@@ -53,10 +53,10 @@ object IvfBuild {
     // the local-fit threshold the whole two-level build collects once and
     // runs on the driver (2 jobs total instead of ~10 — measured 1.3 s →
     // 0.4 s at 2000×64), with identical algorithmic structure. The size
-    // probe is BOUNDED (`limit(cap+1).count`) so a 100 TB corpus never
+    // probe is BOUNDED ([[KMeans.countUpTo]]) so a 100 TB corpus never
     // pays a full scan just to learn it is over the threshold.
     val cap = (KMeans.localFitThreshold / math.max(1, dim)).toInt
-    val n = nRowsHint.getOrElse(clean.limit(cap + 1).count())
+    val n = nRowsHint.getOrElse(KMeans.countUpTo(clean, cap))
     if (n <= cap)
       return buildLocal(spark, clean, dim, kCoarse, kBase)
 
@@ -85,12 +85,9 @@ object IvfBuild {
     // Dense global pids in (coarse_id, cluster) order; empty clusters get
     // filtered out after the size scan below.
     val l2c = l2.withColumn("__pk", col("coarse_id") * 1000000L + col("cluster")).cache()
-    val stats = l2c
-      .groupBy("__pk", "coarse_id")
-      .agg(VectorMean.fn(col("embedding")).as("centroid"), count(lit(1)).as("n"))
-      .collect()
-      .sortBy(_.getLong(0))
-    val pidOf: Map[Long, Long] = stats.map(_.getLong(0)).zipWithIndex.map { case (pk, i) => pk -> i.toLong }.toMap
+    val pkIdx = l2c.schema.fieldIndex("__pk")
+    val stats = VectorSums.of(l2c, "embedding")(() => r => Some(r.getLong(pkIdx))).means.toArray.sortBy(_._1)
+    val pidOf: Map[Long, Long] = stats.map(_._1).zipWithIndex.map { case (pk, i) => pk -> i.toLong }.toMap
 
     // Map-literal lookup instead of a UDF: stays in codegen, no boxing.
     val vectors = l2c
@@ -101,15 +98,9 @@ object IvfBuild {
     assigned1.unpersist()
     l2c.unpersist()
 
-    val partitions = stats.map { r =>
-      PartitionMeta(
-        pid = pidOf(r.getLong(0)),
-        coarseId = r.getLong(1),
-        centroid = r.getSeq[Float](2).toArray,
-        size = r.getLong(3),
-        hits = 0L,
-        lastSplitAt = 0L)
-    }.sortBy(_.pid).toVector
+    val partitions = stats.map { case (pk, (centroid, n)) =>
+      PartitionMeta(pid = pidOf(pk), coarseId = pk / 1000000L, centroid = centroid, size = n, hits = 0L, lastSplitAt = 0L)
+    }.toVector
 
     val baseIds: Map[Long, Vector[Long]] = partitions.groupBy(_.coarseId).map { case (c, ps) =>
       c -> ps.map(_.pid).sorted
@@ -147,22 +138,12 @@ object IvfBuild {
     // Dense pids in (coarse_id, cluster) order, exact mean centroids.
     val pks = l2Rows.zip(a2).map { case ((c, _, _), cl) => c * 1000000L + cl }
     val pidOf = pks.distinct.sorted.zipWithIndex.map { case (pk, i) => pk -> i.toLong }.toMap
-    val stats = scala.collection.mutable.Map.empty[Long, (Array[Double], Long)]
-    l2Rows.zip(pks).foreach { case ((_, _, v), pk) =>
-      val (s, c) = stats.getOrElseUpdate(pk, (new Array[Double](dim), 0L))
-      var i = 0
-      while (i < v.length) { s(i) += v(i); i += 1 }
-      stats(pk) = (s, c + 1)
-    }
+    val sums = new VectorSums[Long]
+    l2Rows.zip(pks).foreach { case ((_, _, v), pk) => sums.add(pk, v) }
+    val stats = sums.means
     val partitions = pidOf.toVector.sortBy(_._2).map { case (pk, pid) =>
-      val (s, c) = stats(pk)
-      PartitionMeta(
-        pid = pid,
-        coarseId = pk / 1000000L,
-        centroid = s.map(x => (x / c).toFloat),
-        size = c,
-        hits = 0L,
-        lastSplitAt = 0L)
+      val (centroid, n) = stats(pk)
+      PartitionMeta(pid = pid, coarseId = pk / 1000000L, centroid = centroid, size = n, hits = 0L, lastSplitAt = 0L)
     }
     val baseIds: Map[Long, Vector[Long]] = partitions.groupBy(_.coarseId).map { case (c, ps) =>
       c -> ps.map(_.pid).sorted

@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.vector.{KMeans, VectorMean}
+import graft.vector.{KMeans, VectorOps, VectorSums}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -98,16 +98,19 @@ object IvfMaintain {
 
     val splitPids = toSplit.map(_.pid).toSet
     val subset = model.vectors.filter(col("partition_id").isInCollection(splitPids)).cache()
-    val (assigned, _) = KMeans.fitGrouped(
+    val (assigned, halfCents) = KMeans.fitGrouped(
       subset, "partition_id", "vec_id", "embedding",
       kFor = splitPids.map(_ -> 2).toMap, iters = 8, seed = 17L)
 
-    val halves = assigned
-      .groupBy("partition_id", "cluster")
-      .agg(VectorMean.fn(col("embedding")).as("centroid"), count(lit(1)).as("n"))
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1)) -> (r.getSeq[Float](2).toArray, r.getLong(3)))
-      .toMap
+    // (mean, count) of each half in one shuffle-free pass over the cached
+    // subset: nearest final centroid is the assignment `fitGrouped`
+    // returns in `cluster`, on its local and distributed paths alike.
+    val pidIdx = subset.schema.fieldIndex("partition_id")
+    val embIdx = subset.schema.fieldIndex("embedding")
+    val halves = VectorSums.of(subset, "embedding") { () => r =>
+      val pid = r.getLong(pidIdx)
+      halfCents.get(pid).map(cs => (pid, KMeans.nearest(cs, r.getArray(embIdx).toFloatArray())))
+    }.means
 
     // Only partitions whose BOTH halves are non-empty actually split
     // (quake_min.py:179); iterate ascending pid like the reference's
@@ -156,18 +159,12 @@ object IvfMaintain {
     // home(origPid) = pid currently holding that partition's vectors
     val home = mutable.Map.from(metas.map(p => p.pid -> p.pid))
 
-    def sqDist(a: Array[Float], b: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i).toDouble - b(i); s += d * d; i += 1 }
-      s
-    }
-
     for (i <- tiny) {
       val ci = metas(i.toInt).centroid
       var bestJ = -1L
       var bestD = Double.PositiveInfinity
       for (j <- tiny if j != i) {
-        val d = sqDist(ci, metas(j.toInt).centroid)
+        val d = VectorOps.l2Sq(ci, metas(j.toInt).centroid)
         if (d < bestD) { bestD = d; bestJ = j }
       }
       if (bestJ >= 0) {

@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.vector.VectorOps
+import graft.vector.{VectorOps, VectorSums}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -78,14 +78,14 @@ object IvfMutate {
         var best = Double.PositiveInfinity
         var c = 0
         while (c < cents.length) {
-          val d = l2Sq(v, cents(c))
+          val d = VectorOps.l2Sq(v, cents(c))
           if (d < best) { best = d; cell = c }
           c += 1
         }
         var pid0 = -1L
         best = Double.PositiveInfinity
         routes(cell).foreach { case (pid, cent) =>
-          val d = l2Sq(v, cent)
+          val d = VectorOps.l2Sq(v, cent)
           if (pid0 < 0 || d < best || (d == best && pid < pid0)) { best = d; pid0 = pid }
         }
         val id = if (r.isNullAt(0)) null else r.getLong(0)
@@ -207,13 +207,11 @@ object IvfMutate {
     model.copy(vectors = newVectors, partitions = parts)
   }
 
-  /** Exact (mean, count) of the requested partitions: one shuffle-free job
-    * over `vectors` (the shape of [[IvfSearch.scanTopKLocal]]). Each map
-    * partition sums the members of `pids` straight from the InternalRow
-    * into double arrays; the driver merges the partials and casts
-    * `sum / n` to float — `VectorMean`'s arithmetic. Rows whose id is in
-    * `gone` count as deleted. A requested partition with no members is
-    * absent from the result. */
+  /** Exact (mean, count) of the requested partitions: one shuffle-free
+    * [[VectorSums]] job over `vectors` (the shape of
+    * [[IvfSearch.scanTopKLocal]]) that sums the members of `pids` only.
+    * Rows whose id is in `gone` count as deleted. A requested partition
+    * with no members is absent from the result. */
   private def partitionStats(
       vectors: DataFrame,
       pids: Set[Long],
@@ -221,44 +219,13 @@ object IvfMutate {
     if (pids.isEmpty) return Map.empty
     val schema = vectors.schema
     val vidIdx = schema.fieldIndex("vec_id")
-    val embIdx = schema.fieldIndex("embedding")
     val pidIdx = schema.fieldIndex("partition_id")
-    val partials = vectors.queryExecution.toRdd
-      .mapPartitions { rows =>
-        val skip = gone.map(_.value).getOrElse(Set.empty[Long])
-        val acc = scala.collection.mutable.HashMap.empty[Long, (Array[Double], Array[Long])]
-        rows.foreach { r =>
-          if (!r.isNullAt(pidIdx) && !r.isNullAt(embIdx) && pids.contains(r.getLong(pidIdx)) &&
-              (r.isNullAt(vidIdx) || !skip.contains(r.getLong(vidIdx)))) {
-            val a = r.getArray(embIdx)
-            val (s, n) = acc.getOrElseUpdate(r.getLong(pidIdx), (new Array[Double](a.numElements()), Array(0L)))
-            var i = 0
-            while (i < s.length) { s(i) += a.getFloat(i); i += 1 }
-            n(0) += 1
-          }
-        }
-        Iterator.single(acc.toArray)
-      }
-      .collect()
-    val total = scala.collection.mutable.HashMap.empty[Long, (Array[Double], Long)]
-    partials.foreach(_.foreach { case (pid, (s, n)) =>
-      total.get(pid) match {
-        case None => total(pid) = (s, n(0))
-        case Some((t, m)) =>
-          var i = 0
-          while (i < t.length) { t(i) += s(i); i += 1 }
-          total(pid) = (t, m + n(0))
-      }
-    })
-    total.map { case (pid, (s, n)) => pid -> (s.map(x => (x / n).toFloat), n) }.toMap
-  }
-
-  /** Squared L2 with `L2Squared`'s arithmetic: float differences widened
-    * to double, accumulated in index order. */
-  private def l2Sq(a: Array[Float], b: Array[Float]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < a.length) { val d = a(i).toDouble - b(i); s += d * d; i += 1 }
-    s
+    VectorSums.of(vectors, "embedding") { () =>
+      val skip = gone.map(_.value).getOrElse(Set.empty[Long])
+      r =>
+        if (!r.isNullAt(pidIdx) && pids.contains(r.getLong(pidIdx)) &&
+            (r.isNullAt(vidIdx) || !skip.contains(r.getLong(vidIdx)))) Some(r.getLong(pidIdx))
+        else None
+    }.means
   }
 }

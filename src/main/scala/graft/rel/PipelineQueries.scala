@@ -4,7 +4,7 @@ import graft.{NamedQuery, Tables}
 import graft.index.{IvfBuild, IvfModel, IvfSearch}
 import graft.multimodal.MultimodalOps
 import graft.text.{Bm25, Cms, Dedup, LangModel, LineDedup, TextOps, TfIdf}
-import graft.vector.{BinaryQuant, Pq, RandomProjection, Sq, VectorMean}
+import graft.vector.{BinaryQuant, Pq, RandomProjection, Sq, VectorSums}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -920,14 +920,18 @@ object PipelineQueries {
           "CAST(1 AS BIGINT) AS shape_ok, CAST(1 AS BIGINT) AS monotone_ok, " +
           "CAST(1 AS BIGINT) AS member_ok, CAST(1 AS BIGINT) AS recall_ok")),
 
-    // Per-label centroids via the VectorMean partial aggregator (O5) —
+    // Per-label centroids via the VectorSums kernel (O5): `n_vecs` counts
+    // rows, the mean skips null embeddings (DuckDB's avg does too) —
     // projected to the first 8 dims so DuckDB can check element-wise.
     NamedQuery(
       "v03_label_centroids",
       (s, dir) => {
-        val c = t(s, dir, "embeddings")
-          .groupBy(col("label").cast("int").as("label"))
-          .agg(count(lit(1)).as("n_vecs"), VectorMean.fn(col("embedding")).as("c"))
+        import s.implicits._
+        val e = t(s, dir, "embeddings").select(col("label").cast("int").as("label"), col("embedding"))
+        val cents = VectorSums.of(e, "embedding")(() => r => Some(Option.when(!r.isNullAt(0))(r.getInt(0)))).means
+        val c = e.groupBy("label").agg(count(lit(1)).as("n_vecs")).as[(Option[Int], Long)].collect()
+          .map { case (label, n) => (label, n, cents.get(label).map(_._1.toSeq)) }
+          .toSeq.toDF("label", "n_vecs", "c")
         c.select(
           col("label") +: col("n_vecs") +:
             (1 to 8).map(i => f32round(element_at(col("c"), i), 3).as(s"d$i")): _*)

@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * Runs an independent k-means for every group (key = a long column) in ONE
   * DataFrame pass per iteration: broadcast the current per-group centroids,
   * assign each row to its nearest centroid with a tight primitive loop,
-  * partially aggregate per-(group, cluster) vector means ([[VectorMean]]),
-  * and collect only `#groups · k · d` floats to the driver. Job count is
+  * sum each (group, cluster)'s members map-side ([[VectorSums]]), and
+  * collect only the partial sums, `#partitions · #groups · k · d` doubles,
+  * to the driver. Job count is
   * O(iters), not O(groups · iters) — this is what lets the reference's
   * two-level IVF build (level-2 k-means per coarse cell, quake_min.py:66-90)
   * run as a constant number of distributed passes on a 1000-executor
@@ -33,11 +34,7 @@ object KMeans {
     var bestD = Double.MaxValue
     var c = 0
     while (c < cents.length) {
-      val ct = cents(c)
-      var s = 0.0
-      var i = 0
-      val n = math.min(ct.length, v.length)
-      while (i < n) { val d = v(i).toDouble - ct(i); s += d * d; i += 1 }
+      val s = VectorOps.l2Sq(v, cents(c))
       if (s < bestD) { bestD = s; best = c }
       c += 1
     }
@@ -63,6 +60,15 @@ object KMeans {
     * on fixture-scale data); production code never writes it. */
   @volatile private[graft] var localFitThreshold: Long = LocalFitThresholdDefault
 
+  /** Rows of `df`, counted until it is known whether they exceed `cap`:
+    * each map partition stops after `cap + 1` rows, as the local limit of
+    * `limit(cap + 1).count()` does, but the partials come straight to the
+    * driver — one shuffle-free job, no single-partition exchange. */
+  private[graft] def countUpTo(df: DataFrame, cap: Int): Long =
+    df.select(lit(1)).queryExecution.toRdd
+      .mapPartitions(rows => Iterator.single(rows.take(cap + 1).size.toLong))
+      .collect().sum
+
   /** Fit k-means per group.
     *
     * @param df        input; must contain `groupCol` (long), `idCol` (long),
@@ -81,7 +87,7 @@ object KMeans {
       seed: Long): (DataFrame, Map[Long, Array[Array[Float]]]) = {
     val spark = df.sparkSession
     val sc = spark.sparkContext
-    val maxK = math.max(1, kFor.values.max)
+    val maxK = math.max(1, if (kFor.isEmpty) 1 else kFor.values.max)
 
     // Groups absent from kFor are dropped, as documented — the assignment
     // closure below would otherwise NPE on them.
@@ -94,7 +100,7 @@ object KMeans {
     val dimRow = dfk.select(size(col(vecCol))).limit(1).collect()
     val dim = if (dimRow.isEmpty) 0 else dimRow(0).getInt(0)
     val cap = (localFitThreshold / math.max(1, dim)).toInt
-    if (dfk.limit(cap + 1).count() <= cap)
+    if (countUpTo(dfk, cap) <= cap)
       return fitGroupedLocal(dfk, groupCol, idCol, vecCol, kFor, iters, seed)
 
     // Hash-ordered per-group pool (init points + reseed spares), computed
@@ -147,59 +153,32 @@ object KMeans {
       udf { (g: Long, v: Seq[Float]) => nearest(bc.value(g), v) }
     }
 
-    // Each iteration is ONE narrow job: mapPartitions over InternalRows
-    // computes per-(group, cluster) partial (sum, count) with primitive
-    // loops — no per-row UDF boxing, no per-iteration shuffle (the old
-    // udf + udaf groupBy shape shuffled every iteration); only
-    // O(#partitions · #groups · k · d) doubles come back to the driver,
-    // merged in partition order (deterministic).
+    // Each iteration is ONE narrow job: the shared kernel sums each
+    // (group, nearest cluster) straight from the InternalRows — no per-row
+    // UDF boxing, no per-iteration shuffle — merged in partition order
+    // (deterministic).
     val proj = dfk.select(col(groupCol).cast("long"), col(vecCol))
     var it = 0
     while (it < iters) {
       val bc = sc.broadcast(centroids)
-      val partials: Array[scala.collection.mutable.Map[(Long, Int), (Array[Double], Long)]] =
-        proj.queryExecution.toRdd.mapPartitions { rows =>
-          val cs = bc.value
-          val acc = scala.collection.mutable.Map.empty[(Long, Int), (Array[Double], Long)]
-          rows.foreach { r =>
-            val g = r.getLong(0)
-            cs.get(g).foreach { cents =>
-              val v = r.getArray(1).toFloatArray()
-              val c = nearest(cents, v)
-              val (s, n) = acc.getOrElseUpdate((g, c), (new Array[Double](v.length), 0L))
-              var i = 0
-              while (i < v.length) { s(i) += v(i); i += 1 }
-              acc((g, c)) = (s, n + 1)
-            }
-          }
-          Iterator.single(acc)
-        }.collect()
+      val sums = VectorSums.of(proj, vecCol) { () =>
+        val cs = bc.value
+        r => {
+          val g = r.getLong(0)
+          cs.get(g).map(cents => (g, nearest(cents, r.getArray(1).toFloatArray())))
+        }
+      }.means
       // per-iteration broadcasts would otherwise accumulate for the session
       // lifetime under the replay/streaming churn path (splitHot refits
       // repeatedly)
       bc.destroy()
 
-      val sums = scala.collection.mutable.Map.empty[(Long, Int), (Array[Double], Long)]
-      partials.foreach(_.foreach { case (key, (ps, pn)) =>
-        sums.get(key) match {
-          case Some((s, n)) =>
-            var i = 0
-            while (i < s.length) { s(i) += ps(i); i += 1 }
-            sums(key) = (s, n + pn)
-          case None => sums(key) = (ps.clone(), pn)
-        }
-      })
-
       centroids = centroids.map { case (g, cents) =>
         val spares = pool.getOrElse(g, Array.empty)
         val next = Array.tabulate(cents.length) { ci =>
           sums.get((g, ci)) match {
-            case Some((s, n)) if n > 0 =>
-              val out = new Array[Float](s.length)
-              var i = 0
-              while (i < out.length) { out(i) = (s(i) / n).toFloat; i += 1 }
-              out
-            case _ =>
+            case Some((m, _)) => m
+            case None =>
               // empty cluster → reseed to a deterministic pool point
               if (spares.nonEmpty) spares((it * cents.length + ci) % spares.length)
               else cents(ci)
@@ -259,46 +238,26 @@ object KMeans {
       while (it < iters) {
         val next = centroids.map { case (g, cents) =>
           val members = byGroup.getOrElse(g, Array.empty)
-          val d = if (members.isEmpty) 0 else members(0)._3.length
           val chunks = if (members.isEmpty) Array(members) else members.grouped(
             math.max(1, (members.length + nThreads - 1) / nThreads)).toArray
           val partials = chunks.map { chunk =>
-            exec.submit(new java.util.concurrent.Callable[(Array[Array[Double]], Array[Long])] {
-              def call(): (Array[Array[Double]], Array[Long]) = {
-                val sums = Array.fill(cents.length)(new Array[Double](d))
-                val counts = new Array[Long](cents.length)
-                chunk.foreach { case (_, _, v) =>
-                  val c = nearest(cents, v)
-                  val s = sums(c)
-                  var i = 0
-                  while (i < v.length) { s(i) += v(i); i += 1 }
-                  counts(c) += 1
-                }
-                (sums, counts)
+            exec.submit(new java.util.concurrent.Callable[VectorSums[Int]] {
+              def call(): VectorSums[Int] = {
+                val part = new VectorSums[Int]
+                chunk.foreach { case (_, _, v) => part.add(nearest(cents, v), v) }
+                part
               }
             })
           }.map(_.get())
-          val sums = Array.fill(cents.length)(new Array[Double](d))
-          val counts = new Array[Long](cents.length)
-          partials.foreach { case (ps, pc) =>
-            var ci = 0
-            while (ci < cents.length) {
-              val s = sums(ci); val p = ps(ci)
-              var i = 0
-              while (i < d) { s(i) += p(i); i += 1 }
-              counts(ci) += pc(ci)
-              ci += 1
-            }
-          }
+          val sums = partials.foldLeft(new VectorSums[Int])(_ merge _).means
           val spares = pool.getOrElse(g, Array.empty)
           val res = Array.tabulate(cents.length) { ci =>
-            if (counts(ci) > 0) {
-              val out = new Array[Float](d)
-              var i = 0
-              while (i < d) { out(i) = (sums(ci)(i) / counts(ci)).toFloat; i += 1 }
-              out
-            } else if (spares.nonEmpty) spares((it * cents.length + ci) % spares.length)
-            else cents(ci)
+            sums.get(ci) match {
+              case Some((m, _)) => m
+              case None =>
+                if (spares.nonEmpty) spares((it * cents.length + ci) % spares.length)
+                else cents(ci)
+            }
           }
           g -> res
         }

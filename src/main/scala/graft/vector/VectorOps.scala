@@ -29,6 +29,17 @@ object VectorOps {
     GraftSqlBridge.column(L2Squared(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
   }
 
+  /** Squared L2 of two float arrays with [[L2Squared]]'s arithmetic: float
+    * differences widened to double, accumulated in index order (over the
+    * shorter length). */
+  private[graft] def l2Sq(a: Array[Float], b: Array[Float]): Double = {
+    var s = 0.0
+    var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) { val d = a(i).toDouble - b(i); s += d * d; i += 1 }
+    s
+  }
+
   /** Higher-order-function form of [[l2Sq]] (built-in `zip_with` +
     * `aggregate`): kept as the semantic reference for parity tests and as
     * the portable fallback. */

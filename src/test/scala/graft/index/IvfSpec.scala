@@ -26,6 +26,13 @@ class IvfSpec extends SparkSpec {
     val actualSizes = model.vectors.groupBy("partition_id").count()
       .as[(Long, Long)].collect().toMap
     model.partitions.foreach(p => assert(actualSizes.getOrElse(p.pid, 0L) == p.size))
+    // the local build's centroids are the row-order double-sum mean, bit for
+    // bit: `vectors` holds the rows in the order the build summed them
+    membersOf(model).foreach { case (pid, ms) =>
+      val sum = new Array[Double](model.dim)
+      ms.foreach { case (_, v) => v.indices.foreach(i => sum(i) += v(i)) }
+      assert(model.partitions(pid.toInt).centroid.toSeq == sum.map(x => (x / ms.length).toFloat).toSeq, s"pid $pid")
+    }
   }
 
   test("APS search achieves recall >= 0.9 at target 0.9 (reference bar, cell-3: 0.968)") {
@@ -254,17 +261,27 @@ class IvfSpec extends SparkSpec {
   }
 
   /** Spark jobs started by `body` on this thread (and the threads it
-    * spawns), counted by a listener keyed on a local property. A sentinel
-    * job drains the listener bus: events of one queue arrive in order. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    * spawns) and the shuffle bytes (read + written) of their tasks, counted
+    * by a listener keyed on a local property. A sentinel job drains the
+    * listener bus: events of one queue arrive in order. */
+  private def costOf[T](body: => T): (T, Int, Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
     val sc = spark.sparkContext
     val key = "graft.test.jobTag"
     val tag = s"jobs-${System.nanoTime()}"
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val stageBytes = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach { t =>
+          seen.add(t)
+          if (t == tag) e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach { m =>
+          stageBytes.add(e.stageId -> (m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten))
+        }
     }
     sc.addSparkListener(listener)
     try {
@@ -274,7 +291,8 @@ class IvfSpec extends SparkSpec {
       val deadline = System.nanoTime() + 30L * 1000000000L
       while (!seen.contains(s"$tag-end") && System.nanoTime() < deadline) Thread.sleep(10)
       assert(seen.contains(s"$tag-end"), "listener bus did not drain")
-      (out, seen.toArray.count(_ == tag))
+      val bytes = stageBytes.toArray.collect { case (st: Int, b: Long) if stages.contains(st) => b }.sum
+      (out, seen.toArray.count(_ == tag), bytes)
     } finally {
       sc.setLocalProperty(key, null)
       sc.removeSparkListener(listener)
@@ -287,12 +305,43 @@ class IvfSpec extends SparkSpec {
     // insert + checkpoint and 5 for delete + checkpoint on this fixture.
     val adds = Seq((700000L, Seq.fill(64)(0.2f)), (700001L, Seq.fill(64)(-0.2f))).toDF("vec_id", "embedding")
     val base = IvfMutate.checkpoint(model)
-    val (m1, insertJobs) = jobsOf(IvfMutate.checkpoint(IvfMutate.insert(base, adds)))
-    val (m2, deleteJobs) = jobsOf(IvfMutate.checkpoint(IvfMutate.delete(m1, Seq(700000L, 3L).toDF("vec_id"))))
+    val (m1, insertJobs, _) = costOf(IvfMutate.checkpoint(IvfMutate.insert(base, adds)))
+    val (m2, deleteJobs, _) = costOf(IvfMutate.checkpoint(IvfMutate.delete(m1, Seq(700000L, 3L).toDF("vec_id"))))
     info(s"insert + checkpoint: $insertJobs jobs; delete + checkpoint: $deleteJobs jobs")
     assert(m2.totalVectors == model.totalVectors)
     assert(insertJobs <= 3, s"insert + checkpoint ran $insertJobs jobs")
     assert(deleteJobs <= 4, s"delete + checkpoint ran $deleteJobs jobs")
+  }
+
+  test("a split-forcing maintain is shuffle-free and runs a pinned number of jobs") {
+    // the split halves' means come from one kernel pass over the cached
+    // subset; the groupBy they replaced shuffled per-(pid, half) partials
+    val base = IvfMutate.checkpoint(model)
+    val (m2, jobs, shuffleBytes) = costOf(IvfMaintain.maintain(base, splitSize = 16L, mergeSize = 2L))
+    info(s"maintain: $jobs jobs, $shuffleBytes shuffle bytes")
+    assert(m2.totalVectors == model.totalVectors)
+    assert(shuffleBytes == 0L, s"maintain shuffled $shuffleBytes bytes")
+    // fit's dimension probe, its bounded count, the local-fit collect and
+    // the halves kernel pass; a maintain that splits nothing runs none
+    assert(jobs == 4, s"maintain ran $jobs jobs")
+  }
+
+  /** Splits every fixture partition of 16+ rows and checks each child (the
+    * split parents and their new siblings) against a driver-side replay over
+    * its members; every other partition must keep its metadata. */
+  private def assertSplitExact(m: IvfModel): Unit = {
+    val after = IvfMaintain.splitHot(m, IvfMaintain.HotQpsWindow, splitSize = 16L)
+    val born = (m.partitions.length until after.partitions.length).map(_.toLong)
+    val parents = m.partitions.filter(p => after.partitions(p.pid.toInt).size != p.size).map(_.pid)
+    assert(born.nonEmpty && parents.length == born.length, s"${parents.length} parents, ${born.length} new pids")
+    assertStatsExact(m, after, parents.toSet ++ born)
+  }
+
+  test("split children's centroids and sizes are the mean and count of their members (local and distributed fits)") {
+    assertSplitExact(model)
+    graft.vector.KMeans.localFitThreshold = 0L
+    try assertSplitExact(model)
+    finally graft.vector.KMeans.localFitThreshold = graft.vector.KMeans.LocalFitThresholdDefault
   }
 
   test("split threshold clamps to [split/1.5, split*2] with the reference hotness quirk (O13)") {

@@ -55,6 +55,13 @@ class KMeansSpec extends SparkSpec {
     assert(cents.keySet == Set(0L, 1L))
   }
 
+  test("fitGrouped on an empty kFor returns an empty assignment and no centroids") {
+    val df = Seq((0L, 10L, Seq(1f)), (1L, 11L, Seq(2f))).toDF("g", "id", "v")
+    val (assigned, cents) = KMeans.fitGrouped(df, "g", "id", "v", Map.empty, iters = 2, seed = 3L)
+    assert(assigned.count() == 0L)
+    assert(cents.isEmpty)
+  }
+
   test("fitGrouped runs independent k-means per group in one pass") {
     val df = Seq(
       (0L, 0L, Seq(0f)), (0L, 1L, Seq(1f)), (0L, 2L, Seq(10f)), (0L, 3L, Seq(11f)),

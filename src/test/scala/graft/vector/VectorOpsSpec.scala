@@ -114,13 +114,21 @@ class VectorOpsSpec extends SparkSpec {
     assert(ok.toSeq == Seq(1L))
   }
 
+  // The VectorMean aggregator is now the VectorSums kernel; the test keeps its name.
   test("VectorMean aggregator computes per-group element-wise mean (O5)") {
     val df = Seq(
-      (0L, Seq(1f, 2f)), (0L, Seq(3f, 6f)),
-      (1L, Seq(10f, 0f))).toDF("g", "v")
-    val rows = df.groupBy("g").agg(VectorMean.fn(col("v")).as("m"))
-      .orderBy("g").collect()
-    assert(rows(0).getSeq[Float](1) == Seq(2f, 4f))
-    assert(rows(1).getSeq[Float](1) == Seq(10f, 0f))
+      (0L, Some(Seq(1f, 2f))), (0L, Some(Seq(3f, 6f))),
+      (1L, Some(Seq(10f, 0f))), (1L, None)).toDF("g", "v")
+    val means = VectorSums.of(df, "v")(() => r => Some(r.getLong(0))).means
+    assert(means.keySet == Set(0L, 1L))
+    assert(means(0L)._1.toSeq == Seq(2f, 4f) && means(0L)._2 == 2L)
+    assert(means(1L)._1.toSeq == Seq(10f, 0f) && means(1L)._2 == 1L)
+    assert(VectorSums.of(df.limit(0), "v")(() => r => Some(r.getLong(0))).means.isEmpty)
+    // driver-array form: merging two partials equals adding every row
+    val a = new VectorSums[Int]; a.add(0, Array(1f, 2f))
+    val b = new VectorSums[Int]; b.add(0, Array(3f, 6f)); b.add(1, Array(10f, 0f))
+    val m = a.merge(b).means
+    assert(m(0)._1.toSeq == Seq(2f, 4f) && m(0)._2 == 2L && m(1)._1.toSeq == Seq(10f, 0f))
+    assert(new VectorSums[Int].means.isEmpty)
   }
 }
