@@ -179,6 +179,8 @@ object Replay {
     // no limit node when the corpus is already within the cap — GlobalLimit
     // shuffles everything to one partition just to count it off
     val warmInput = if (nRows <= warmN) emb else emb.limit(warmN.toInt)
+    // (unpersist frees a distributed build's cache; a local build's stored
+    // table is freed once ContextCleaner collects it)
     IvfBuild.build(warmInput, dim, nRowsHint = Some(warmN)).vectors.unpersist()
 
     val tb = System.nanoTime()
@@ -349,13 +351,15 @@ object Replay {
       }
       // lineage truncation; superseded tables are released only AFTER the
       // checkpoint materializes (they are inputs of the live plan until
-      // then). Since the mutate path stopped caching per-epoch tables, the
-      // buffer's remaining live purpose is dropping the PRIOR checkpoint's
-      // localCheckpoint blocks and maintain's cached outputs
+      // then). The checkpoint copies only a table that is not already
+      // stored, and may return the live table itself, which is never
+      // released. The buffer's live purpose is dropping a cached table
+      // (the distributed build's) once a stored copy replaces it; stored
+      // tables are freed by ContextCleaner once unreferenced
       if (nBatches % checkpointEvery == 0) {
         superseded += model.vectors
         model = phase("checkpoint")(IvfMutate.checkpoint(model))
-        superseded.foreach(_.unpersist())
+        superseded.foreach(v => if (v ne model.vectors) v.unpersist())
         superseded.clear()
       }
       // mirror refresh (untimed, like the reference's oracle bookkeeping):

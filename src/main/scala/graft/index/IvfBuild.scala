@@ -111,7 +111,10 @@ object IvfBuild {
 
   /** Driver-local two-level build (same structure, zero per-iteration
     * jobs): collect → level-1 Lloyd's → level-2 grouped Lloyd's → dense
-    * pids + exact centroid means → one `createDataFrame` for the payload. */
+    * pids + exact centroid means → one stored (`localCheckpoint`ed) table
+    * for the payload. `unpersist()` on that table is a no-op: its blocks are
+    * freed when the driver's ContextCleaner collects the RDD after the last
+    * reference to it goes. */
   private def buildLocal(
       spark: org.apache.spark.sql.SparkSession,
       clean: DataFrame,
@@ -163,13 +166,19 @@ object IvfBuild {
     val unsafeRows: Array[InternalRow] = l2Rows.zip(pks).map { case ((_, id, v), pk) =>
       proj(InternalRow(id, ArrayData.toArrayData(v), pidOf(pk))).copy(): InternalRow
     }
+    // The identity map is what gets stored: the store then drops its parent,
+    // which holds `unsafeRows`, so the table is not kept twice on the driver.
     val rdd = spark.sparkContext
       .parallelize(scala.collection.immutable.ArraySeq.unsafeWrapArray(unsafeRows),
         spark.sparkContext.defaultParallelism)
-    val vectors = org.apache.spark.sql.GraftSqlBridge
-      .internalCreateDataFrame(spark, rdd, schema)
-      .cache()
-    vectors.count()
+      .mapPartitions(identity, preservesPartitioning = true)
+      .localCheckpoint()
+    // Store the rows with a per-partition count (`count()` would ship its
+    // partial counts through a shuffle), then build the frame, so its plan
+    // sees only the stored partitions. A stored table is a leaf: the first
+    // write appends to it and `IvfMutate.checkpoint` keeps it as is.
+    rdd.mapPartitions(rows => Iterator.single(rows.size)).collect()
+    val vectors = org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(spark, rdd, schema)
     IvfModel(dim, vectors, cents1(0L), baseIds, partitions, queryCounter = 0L)
   }
 }

@@ -1,7 +1,7 @@
 package graft.index
 
 import graft.vector.{KMeans, VectorOps, VectorSums}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
@@ -98,15 +98,16 @@ object IvfMaintain {
 
     val splitPids = toSplit.map(_.pid).toSet
     val subset = model.vectors.filter(col("partition_id").isInCollection(splitPids)).cache()
-    val (assigned, halfCents) = KMeans.fitGrouped(
+    val (_, halfCents) = KMeans.fitGrouped(
       subset, "partition_id", "vec_id", "embedding",
       kFor = splitPids.map(_ -> 2).toMap, iters = 8, seed = 17L)
 
     // (mean, count) of each half in one shuffle-free pass over the cached
     // subset: nearest final centroid is the assignment `fitGrouped`
     // returns in `cluster`, on its local and distributed paths alike.
-    val pidIdx = subset.schema.fieldIndex("partition_id")
-    val embIdx = subset.schema.fieldIndex("embedding")
+    val schema = model.vectors.schema
+    val pidIdx = schema.fieldIndex("partition_id")
+    val embIdx = schema.fieldIndex("embedding")
     val halves = VectorSums.of(subset, "embedding") { () => r =>
       val pid = r.getLong(pidIdx)
       halfCents.get(pid).map(cs => (pid, KMeans.nearest(cs, r.getArray(embIdx).toFloatArray())))
@@ -128,25 +129,27 @@ object IvfMaintain {
         case _ => // degenerate 2-means; leave as-is
       }
     }
-    if (siblingOf.isEmpty) { subset.unpersist(); return model }
-
-    // Map-literal remap instead of a UDF: cluster-1 rows move to the new
-    // sibling pid, everything else keeps its pid.
-    val sibLit = typedLit(siblingOf.toMap)
-    val keep = model.vectors.filter(!col("partition_id").isInCollection(splitPids))
-    val moved = assigned
-      .withColumn(
-        "partition_id",
-        when(col("cluster") === 1, coalesce(try_element_at(sibLit, col("partition_id")), col("partition_id")))
-          .otherwise(col("partition_id")))
-      .select("vec_id", "embedding", "partition_id")
-    val out = model.copy(vectors = keep.unionByName(moved), partitions = parts)
-    // drop the subset cache now rather than leak it for the session: the
-    // returned plan re-derives the filtered subset on materialization (one
-    // cheap filter over the — typically cached — vectors table), and the
-    // halves/assignment work above already consumed the cached copy
     subset.unpersist()
-    out
+    if (siblingOf.isEmpty) return model
+
+    // Map-side move over the table, with the same assignment as the halves
+    // pass: a row of a split partition goes to the new sibling when its
+    // nearest final centroid is half 1. Every other row passes as is.
+    val moves = siblingOf.map { case (pid, sib) => pid -> (sib, halfCents(pid)) }.toMap
+    val rows = model.vectors.queryExecution.toRdd.mapPartitions(_.map { r =>
+      if (r.isNullAt(pidIdx) || r.isNullAt(embIdx)) r
+      else
+        moves.get(r.getLong(pidIdx)) match {
+          case Some((sib, cs)) if KMeans.nearest(cs, r.getArray(embIdx).toFloatArray()) == 1 =>
+            val out = r.copy()
+            out.setLong(pidIdx, sib)
+            out
+          case _ => r
+        }
+    })
+    model.copy(
+      vectors = GraftSqlBridge.internalCreateDataFrame(model.vectors.sparkSession, rows, schema),
+      partitions = parts)
   }
 
   /** Merge phase (quake_min.py:189-210): exact sequential greedy replay on

@@ -34,7 +34,8 @@ final case class PartitionMeta(
   *    quake_min.py:46-49). NOTE the reference never registers split-born
   *    partitions here (quake_min.py:183-184 appends to `base_parts` only) —
   *    we reproduce that quirk, so routing and `partitions` can diverge.
-  *  - `id2loc` has no analog: deletes are anti-joins (SURVEY.md §2 O9).
+  *  - `id2loc` has no analog: a delete filters a broadcast id set out of
+  *    `vectors` (SURVEY.md §2 O9).
   */
 final case class IvfModel(
     dim: Int,

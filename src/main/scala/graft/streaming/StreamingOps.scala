@@ -47,13 +47,14 @@ object StreamingOps {
         val next = IvfMutate.insert(
           state.get(),
           batch.select(col("vec_id").cast("long").as("vec_id"), col("embedding")))
-        // truncate lineage AND re-bound the RDD partition count every batch
-        // (streaming runs unbounded epochs — without the coalesce inside
-        // IvfMutate.checkpoint, each micro-batch's union appends sliver
-        // partitions forever), then drop the superseded epoch's cache
+        // bound lineage and the RDD partition count every batch: insert
+        // appends the batch to a stored table without a copy, and
+        // IvfMutate.checkpoint copies the next batch's append to that view
+        // (so every second batch), or a table that is not stored. Drop the
+        // pre-checkpoint table's cache only when the checkpoint replaced it.
         val old = next.vectors
         val checked = IvfMutate.checkpoint(next)
-        old.unpersist()
+        if (old ne checked.vectors) old.unpersist()
         state.set(checked)
         onUpdate(checked)
       }

@@ -202,6 +202,23 @@ class IvfSpec extends SparkSpec {
     assertStatsExact(m1, m2, deletedPids)
   }
 
+  private def l2(a: Seq[Float], b: Array[Float]): Double =
+    a.indices.foldLeft(0.0) { (s, i) => val d = a(i).toDouble - b(i); s + d * d }
+
+  /** Driver-side routing replay: coarse argmin, then base argmin in the
+    * cell's routing list (ties → lowest id); empty cells get dense new pids.
+    * Returns each inserted row's pid. */
+  private def replay(m: IvfModel, rows: Seq[(Long, Seq[Float])]): Map[Long, Long] = {
+    val routes = rows.filter(_._2.length == m.dim).map { case (id, v) =>
+      val cell = m.coarseCentroids.indices.minBy(c => (l2(v, m.coarseCentroids(c)), c)).toLong
+      val pids = m.coarseBaseIds.getOrElse(cell, Vector.empty)
+      id -> (cell, if (pids.isEmpty) None else Some(pids.minBy(p => (l2(v, m.partitions(p.toInt).centroid), p))))
+    }
+    val newPid = routes.collect { case (_, (c, None)) => c }.distinct.sorted.zipWithIndex
+      .map { case (c, i) => c -> (m.partitions.length + i).toLong }.toMap
+    routes.map { case (id, (c, p)) => id -> p.getOrElse(newPid(c)) }.toMap
+  }
+
   test("insert routing equals a driver-side two-level argmin (ties → lowest id, empty cells, wrong dim)") {
     // 2-d toy index: cell 0 routes to pids [1, 0] (unsorted, so a tie is
     // decided by id, not list order), cell 1 to [2], cells 2 and 3 are empty
@@ -229,20 +246,6 @@ class IvfSpec extends SparkSpec {
       (16L, Seq(1f, 2f, 3f)))  // wrong dimension: dropped
     val m2 = IvfMutate.insert(toy, batch.toDF("vec_id", "embedding"))
 
-    def l2(a: Seq[Float], b: Array[Float]): Double =
-      a.indices.foldLeft(0.0) { (s, i) => val d = a(i).toDouble - b(i); s + d * d }
-    /** Driver-side replay: coarse argmin, then base argmin in the cell's
-      * routing list (ties → lowest id); empty cells get dense new pids. */
-    def replay(m: IvfModel, rows: Seq[(Long, Seq[Float])]): Map[Long, Long] = {
-      val routes = rows.filter(_._2.length == m.dim).map { case (id, v) =>
-        val cell = m.coarseCentroids.indices.minBy(c => (l2(v, m.coarseCentroids(c)), c)).toLong
-        val pids = m.coarseBaseIds.getOrElse(cell, Vector.empty)
-        id -> (cell, if (pids.isEmpty) None else Some(pids.minBy(p => (l2(v, m.partitions(p.toInt).centroid), p))))
-      }
-      val newPid = routes.collect { case (_, (c, None)) => c }.distinct.sorted.zipWithIndex
-        .map { case (c, i) => c -> (m.partitions.length + i).toLong }.toMap
-      routes.map { case (id, (c, p)) => id -> p.getOrElse(newPid(c)) }.toMap
-    }
     def routedPids(m: IvfModel, from: Long): Map[Long, Long] =
       m.vectors.filter(col("vec_id") >= from).select("vec_id", "partition_id").as[(Long, Long)].collect().toMap
 
@@ -301,16 +304,34 @@ class IvfSpec extends SparkSpec {
 
   test("a write costs the batch: insert + checkpoint and delete + checkpoint stay within their job budgets") {
     // Budgets are the counts the batch-sized write path runs (they repeat
-    // run to run); the corpus-wide aggregation it replaced ran 12 jobs for
-    // insert + checkpoint and 5 for delete + checkpoint on this fixture.
+    // run to run): insert is the route-pair collect plus one stats pass over
+    // the appended view, delete the touched-pid scan plus one pass that
+    // stores the survivors and sums the touched partitions; neither
+    // checkpoint copies. A checkpoint that copied the table after every
+    // write ran 3 and 4; the corpus-wide aggregation before it, 12 and 5.
     val adds = Seq((700000L, Seq.fill(64)(0.2f)), (700001L, Seq.fill(64)(-0.2f))).toDF("vec_id", "embedding")
     val base = IvfMutate.checkpoint(model)
     val (m1, insertJobs, _) = costOf(IvfMutate.checkpoint(IvfMutate.insert(base, adds)))
     val (m2, deleteJobs, _) = costOf(IvfMutate.checkpoint(IvfMutate.delete(m1, Seq(700000L, 3L).toDF("vec_id"))))
     info(s"insert + checkpoint: $insertJobs jobs; delete + checkpoint: $deleteJobs jobs")
     assert(m2.totalVectors == model.totalVectors)
-    assert(insertJobs <= 3, s"insert + checkpoint ran $insertJobs jobs")
-    assert(deleteJobs <= 4, s"delete + checkpoint ran $deleteJobs jobs")
+    assert(m2.vectors.count() == m2.totalVectors)
+    assert(insertJobs <= 2, s"insert + checkpoint ran $insertJobs jobs")
+    assert(deleteJobs <= 2, s"delete + checkpoint ran $deleteJobs jobs")
+  }
+
+  test("checkpoint of a leaf returns the same model and runs no job") {
+    // the local build stores its table, so it is a leaf from the start
+    val base = model
+    val ins = IvfMutate.insert(base, Seq((710000L, Seq.fill(64)(0.3f))).toDF("vec_id", "embedding"))
+    val del = IvfMutate.delete(ins, Seq(710000L, 5L).toDF("vec_id"))
+    Seq("built" -> base, "inserted" -> ins, "deleted" -> del).foreach { case (what, m) =>
+      val (out, jobs, _) = costOf(IvfMutate.checkpoint(m))
+      assert(out eq m, s"$what: checkpoint returned a new model")
+      assert(out.vectors eq m.vectors, s"$what: checkpoint replaced vectors")
+      assert(jobs == 0, s"$what: checkpoint ran $jobs jobs")
+    }
+    assert(del.vectors.count() == model.totalVectors - 1 && del.totalVectors == model.totalVectors - 1)
   }
 
   test("a split-forcing maintain is shuffle-free and runs a pinned number of jobs") {
@@ -324,6 +345,22 @@ class IvfSpec extends SparkSpec {
     // fit's dimension probe, its bounded count, the local-fit collect and
     // the halves kernel pass; a maintain that splits nothing runs none
     assert(jobs == 4, s"maintain ran $jobs jobs")
+  }
+
+  test("a split-forcing maintain and its checkpoint copy the table once, shuffle-free") {
+    // the split moves its rows map-side over the table, so the checkpoint
+    // reads the table once; re-deriving the split subset through the fit's
+    // assignment frame cost the copy a second job
+    val base = IvfMutate.checkpoint(model)
+    val (m2, jobs, shuffleBytes) =
+      costOf(IvfMutate.checkpoint(IvfMaintain.maintain(base, splitSize = 16L, mergeSize = 2L)))
+    info(s"maintain + checkpoint: $jobs jobs, $shuffleBytes shuffle bytes")
+    assert(m2.partitions.length > model.partitions.length, "precondition: something split")
+    assert(shuffleBytes == 0L, s"maintain + checkpoint shuffled $shuffleBytes bytes")
+    assert(jobs <= 5, s"maintain + checkpoint ran $jobs jobs")
+    val sizes = m2.vectors.groupBy("partition_id").count().as[(Long, Long)].collect().toMap
+    m2.partitions.foreach(p => assert(sizes.getOrElse(p.pid, 0L) == p.size, s"pid ${p.pid}"))
+    assert(m2.vectors.count() == model.totalVectors)
   }
 
   /** Splits every fixture partition of 16+ rows and checks each child (the
@@ -432,6 +469,106 @@ class IvfSpec extends SparkSpec {
     }
     assert(m.totalVectors == emb.count() + 5 * 3)
     assert(m.vectors.count() == m.totalVectors)
+  }
+
+  /** Depth of an RDD's lineage: the longest dependency chain below it. */
+  private def lineageDepth(rdd: org.apache.spark.rdd.RDD[_]): Int =
+    1 + rdd.dependencies.map(d => lineageDepth(d.rdd)).maxOption.getOrElse(0)
+
+  test("20 insert-only epochs (the streaming ingest shape) stay bounded in partitions and lineage; the mirror equals a driver replay") {
+    // Each epoch is `StreamingOps.ingest`'s: insert, checkpoint, then
+    // unpersist the insert's output unless the checkpoint returned it. A
+    // stored table takes one append as a view (the base's blocks, with the
+    // batch's added to its last RDD partition); an append to that view is
+    // copied, so every second checkpoint copies.
+    val target = spark.sparkContext.defaultParallelism
+    val rng = new scala.util.Random(5)
+    val members = emb.select("embedding").as[Seq[Float]].collect()
+    var m = model
+    var want = IvfSearch.collectMirror(model.vectors).map { case (pid, id, v) => id -> (pid, v.toSeq) }.toMap
+    var copies = 0
+    var depth = 0
+    for (epoch <- 0 until 20) {
+      val rows = (0 until 3).map { i =>
+        (720000L + epoch * 3 + i, members(rng.nextInt(members.length)).map(x => x + 0.05f * rng.nextGaussian().toFloat))
+      }
+      val pids = replay(m, rows)
+      want ++= rows.map { case (id, v) => id -> (pids(id), v) }
+      val next = IvfMutate.insert(m, rows.toDF("vec_id", "embedding"))
+      val checked = IvfMutate.checkpoint(next)
+      if (next.vectors ne checked.vectors) { next.vectors.unpersist(); copies += 1 }
+      m = checked
+      val rdd = m.vectors.queryExecution.toRdd
+      assert(rdd.getNumPartitions <= target, s"epoch $epoch: ${rdd.getNumPartitions} RDD partitions > $target")
+      val d = lineageDepth(rdd)
+      depth = math.max(depth, d)
+      assert(d <= 6, s"epoch $epoch: lineage depth $d > 6")
+    }
+    info(s"20 epochs: $copies checkpoint copies, lineage depth at most $depth")
+    assert(copies == 10, s"$copies checkpoint copies: one per 2 appends to the built table")
+    assert(m.vectors.count() == emb.count() + 60 && m.totalVectors == emb.count() + 60)
+    val got = IvfSearch.collectMirror(m.vectors).map { case (pid, id, v) => id -> (pid, v.toSeq) }
+    assert(got.length == want.size, "a row is repeated or missing")
+    assert(got.toMap == want)
+    val sizes = got.groupBy(_._2._1).view.mapValues(_.length.toLong).toMap
+    m.partitions.foreach(p => assert(sizes.getOrElse(p.pid, 0L) == p.size, s"pid ${p.pid}"))
+  }
+
+  test("superseded tables are unpersisted after every write; a caller-cached base is copied, not viewed") {
+    // The perfbench and Replay shape: write, checkpoint, then unpersist the
+    // superseded table unless it is the live one. The first write sits on a
+    // caller-cached table, which a view would lose with its cache.
+    val own = model.vectors.select("vec_id", "embedding", "partition_id").cache()
+    own.count()
+    var m = model.copy(vectors = own)
+    val live = scala.collection.mutable.Map.empty[Long, Seq[Float]] ++=
+      emb.select("vec_id", "embedding").as[(Long, Seq[Float])].collect()
+    def write(name: String, add: Seq[(Long, Seq[Float])] = Nil, drop: Seq[Long] = Nil)(f: IvfModel => IvfModel): Unit = {
+      val next = IvfMutate.checkpoint(f(m))
+      if (next.vectors ne m.vectors) m.vectors.unpersist()
+      assert(m.vectors.storageLevel == org.apache.spark.storage.StorageLevel.NONE, s"$name: superseded table still cached")
+      m = next
+      live ++= add
+      live --= drop
+      val rows = m.vectors.select("vec_id", "embedding").as[(Long, Seq[Float])].collect()
+      val byId = rows.toMap
+      val bad = (byId.keySet ++ live.keySet).filterNot(id => byId.get(id) == live.get(id))
+      assert(rows.length == live.size && bad.isEmpty, s"$name: ${rows.length} rows, ${live.size} live; ids ${bad.toSeq.sorted.take(5)} differ")
+      val sizes = m.vectors.groupBy("partition_id").count().as[(Long, Long)].collect().toMap
+      m.partitions.foreach(p => assert(sizes.getOrElse(p.pid, 0L) == p.size, s"$name: pid ${p.pid}"))
+    }
+    val adds = (0 until 4).map(i => (730000L + i, Seq.fill(64)(0.1f * i)))
+    write("insert over the cached base", add = adds) { b =>
+      val out = IvfMutate.insert(b, adds.toDF("vec_id", "embedding"))
+      assert(IvfMutate.checkpoint(out).vectors ne out.vectors, "a view over a cached table must be copied")
+      out
+    }
+    assert(own.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    write("delete", drop = Seq(730000L, 7L))(IvfMutate.delete(_, Seq(730000L, 7L).toDF("vec_id")))
+    val more = (0 until 3).map(i => (740000L + i, Seq.fill(64)(-0.1f * i)))
+    write("insert over a leaf", add = more)(IvfMutate.insert(_, more.toDF("vec_id", "embedding")))
+    write("maintain")(IvfMaintain.maintain(_, splitSize = 16L, mergeSize = 2L))
+    val one = Seq((750000L, Seq.fill(64)(0.05f)))
+    write("insert after maintain", add = one)(IvfMutate.insert(_, one.toDF("vec_id", "embedding")))
+    write("delete after maintain", drop = Seq(740001L, 750000L))(IvfMutate.delete(_, Seq(740001L, 750000L).toDF("vec_id")))
+  }
+
+  test("a delete's stored table does not keep the table it replaced in memory") {
+    // Build, insert (a view over the built table's stored RDD), delete: once
+    // the built and inserted models are gone, nothing the delete returned
+    // may reach the built table's RDD, or its blocks stay stored for as long
+    // as the delete's table lives. The writes run in their own method so no
+    // frame of this test holds them.
+    def writes(): (IvfModel, java.lang.ref.WeakReference[AnyRef]) = {
+      val built = IvfBuild.build(emb, dim = 64)
+      val stored = built.vectors.queryExecution.logical.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+      val ins = IvfMutate.insert(built, Seq((760000L, Seq.fill(64)(0.3f))).toDF("vec_id", "embedding"))
+      (IvfMutate.delete(ins, Seq(760000L, 9L).toDF("vec_id")), new java.lang.ref.WeakReference[AnyRef](stored))
+    }
+    val (m, builtRdd) = writes()
+    val freed = (1 to 10).exists { _ => System.gc(); Thread.sleep(50); builtRdd.get == null }
+    assert(freed, "the deleted-from table's RDD is still reachable from the delete's result")
+    assert(m.vectors.count() == emb.count() - 1 && m.totalVectors == emb.count() - 1)
   }
 
   test("model save/load round-trips through partitioned parquet") {
