@@ -1,7 +1,12 @@
 package graft.index
 
-import org.apache.spark.sql.DataFrame
+import graft.vector.{KMeans, TopKAgg, TopKBuf, VectorOps}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 /** [engine-added] Hierarchical navigable-graph ANN index (HNSW, Malkov &
   * Yashunin TPAMI 2018), Spark-native and fully deterministic: instead
@@ -107,20 +112,61 @@ object Hnsw {
     Layer(nodes, graph)
   }
 
-  private def emptyIdsDf(spark: org.apache.spark.sql.SparkSession, name: String): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(name, org.apache.spark.sql.types.LongType))))
+  private def localIds(
+      spark: SparkSession, name: String, ids: Seq[java.lang.Long], nullable: Boolean = true): DataFrame =
+    spark.createDataFrame(ids.map(Row(_)).asJava, StructType(Seq(StructField(name, LongType, nullable))))
 
-  private def emptyNodesDf(spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField(
-          "embedding",
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)))))
+  private def emptyNodesDf(spark: SparkSession): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), StructType(Seq(
+      StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType)))))
+
+  private val EdgeSchema = StructType(Seq(
+    StructField("src", LongType, nullable = false), StructField("dst", LongType, nullable = false),
+    StructField("rnk", IntegerType, nullable = false), StructField("dist2", DoubleType, nullable = false)))
+
+  /** `(src, dst, rnk, dist2)` rows as a local leaf: the plan carries the
+    * rows, so reading them runs no job. */
+  private def localEdges(spark: SparkSession, edges: Seq[(Long, Long, Int, Double)]): DataFrame =
+    spark.createDataFrame(edges.map { case (s, d, r, x) => Row(s, d, r, x) }.asJava, EdgeSchema)
+
+  private def in(key: String, ids: Iterable[Long]): Column = col(key).isInCollection(ids)
+
+  /** `df` without the rows whose `key` is in `ids`: a left-anti join on a
+    * driver-held key set, as a map-side filter (a null key stays, as it
+    * does in the join). */
+  private def notIn(df: DataFrame, key: String, ids: Iterable[Long]): DataFrame =
+    if (ids.isEmpty) df else df.filter(col(key).isNull || !in(key, ids))
+
+  /** The rows of `df` that pass `keep`, projected to `cols` and tagged
+    * `tag`: one part of a [[gather]]. A key test written with [[in]] is an
+    * `IN` filter in the scan (pushed into Parquet), so only matching rows
+    * are deserialized. */
+  private def part(tag: Int, df: DataFrame, keep: Column, cols: Column*): RDD[(Int, Row)] =
+    df.filter(keep).select(cols: _*).rdd.map(r => (tag, r))
+
+  /** Runs `parts` as ONE Spark job, a union of their map-side scans (so
+    * shuffle-free when each part's plan is), and returns each tag's rows.
+    * No parts, no job. */
+  private def gather(parts: Seq[RDD[(Int, Row)]]): Map[Int, Array[Row]] =
+    if (parts.isEmpty) Map.empty[Int, Array[Row]].withDefaultValue(Array.empty)
+    else parts.head.sparkContext.union(parts).collect()
+      .groupBy(_._1).map { case (t, rs) => t -> rs.map(_._2) }
+      .withDefaultValue(Array.empty)
+
+  private def hasNull(r: Row): Boolean = (0 until r.length).exists(r.isNullAt)
+
+  /** Per-src top-`k` of `(src, dst, dist2)` candidates by [[TopKAgg]]'s own
+    * rule (ascending `(dist2, dst)`, duplicates kept) — what
+    * [[graft.vector.TopK.perQuery]] returns, as `(src, dst, rnk, dist2)`
+    * rows. */
+  private def topKPerSrc(cands: Iterable[(Long, Long, Double)], k: Int): Seq[(Long, Long, Int, Double)] = {
+    val agg = new TopKAgg(k)
+    val bufs = scala.collection.mutable.LongMap.empty[TopKBuf]
+    cands.foreach { case (s, d, x) => agg.reduce(bufs.getOrElseUpdate(s, agg.zero), (s, x, d)) }
+    bufs.toSeq.sortBy(_._1).flatMap { case (s, b) =>
+      agg.finish(b).zipWithIndex.map { case ((x, d), i) => (s, d, i + 1, x) }
+    }
+  }
 
   /** Brute-scored top-layer seeds `(query_id, vec_id)` — the shared
     * entry step of [[search]] and [[insert]]'s descend: every top-layer
@@ -244,8 +290,8 @@ object Hnsw {
     * oversized top only via the nextN == 0 hash fluke; [[insert]] grows
     * the top by the hash-expected trickle but NEVER re-checks — across
     * many batches the bound erodes silently. One cheap check (build
-    * passes the count its loop already holds; insert counts a tiny
-    * localCheckpoint'd top) turns both into a loud signal: past `topCap`
+    * passes the count its loop already holds; insert counts the top inside
+    * its repair gather) turns both into a loud signal: past `topCap`
     * the caller should [[deepen]] (one new level re-bounds it) rather
     * than keep broadcasting an n-sized relation. */
   private def warnIfTopOversized(topN: Long, topCap: Long, op: String): Unit =
@@ -293,11 +339,14 @@ object Hnsw {
     *     [[GraphPrune.alphaPrune]] instead.
     *
     * Scale shape: per batch row the walk work is the search cost
-    * (O(layers·rounds·beam·deg)); the repair is bounded by
-    * |batch|·k touched nodes × ≤(k + |arrivals|) candidate edges each,
-    * all distances reused from the walk/graph (no re-scoring joins) —
-    * nothing data-sized moves, so micro-batch maintenance stays
-    * micro-batch priced at any corpus size. Intra-batch edges are not
+    * (O(layers·rounds·beam·deg)); attach and repair run on the driver.
+    * Two shuffle-free jobs, each over every layer at once, bring back the
+    * joiners' attach rows (|batch|·k per layer) and the ≤ |batch|·k
+    * touched nodes' current edges; each touched node re-selects over
+    * ≤ k + |arrivals| candidates with distances reused from the walk and
+    * the graph (no re-scoring). Nothing data-sized moves, so micro-batch
+    * maintenance stays micro-batch priced at any corpus size; the batch's
+    * ids and those rows are what the driver holds. Intra-batch edges are not
     * created on insert (candidates come from the existing members); a
     * subsequent [[KnnJoin.nnDescentRound]] — the maintenance operator —
     * recovers them, mirroring how the reference's per-row inserts only
@@ -314,16 +363,14 @@ object Hnsw {
       topCap: Long = 256L,
       perLayerK: Int = 8,
       validate: Boolean = true): Seq[Layer] =
-    insertImpl(layers, batch, k, beam, rounds, shrink, topCap, perLayerK,
-      validate, wantDelta = false)._1
+    insertWithDelta(layers, batch, k, beam, rounds, shrink, topCap, perLayerK, validate)._1
 
   /** [[insert]] that ALSO returns the per-layer [[LayerDelta]] — the
     * batch-sized record of exactly which rows the mutation changed, for
     * [[saveDelta]]'s durability log. The delta's `graphUpserts` are
-    * eagerly materialized (localCheckpoint) so persisting them later
-    * never re-runs the walks; everything else in the delta is a plain
-    * projection of the caller's batch. Aligned top-first with the
-    * returned stack. */
+    * driver-computed rows in a local leaf, so persisting them later never
+    * re-runs the walks; `nodesAdded` is a plain projection of the
+    * caller's batch. Aligned top-first with the returned stack. */
   def insertWithDelta(
       layers: Seq[Layer],
       batch: DataFrame,
@@ -334,40 +381,27 @@ object Hnsw {
       topCap: Long = 256L,
       perLayerK: Int = 8,
       validate: Boolean = true): (Seq[Layer], Seq[LayerDelta]) = {
-    val (st, d) = insertImpl(layers, batch, k, beam, rounds, shrink, topCap,
-      perLayerK, validate, wantDelta = true)
-    (st, d.get)
-  }
-
-  private def insertImpl(
-      layers: Seq[Layer],
-      batch: DataFrame,
-      k: Int,
-      beam: Int,
-      rounds: Int,
-      shrink: Int,
-      topCap: Long,
-      perLayerK: Int,
-      validate: Boolean,
-      wantDelta: Boolean): (Seq[Layer], Option[Seq[LayerDelta]]) = {
     require(layers.nonEmpty, "empty layer stack")
     require(k >= 1 && beam >= k && shrink >= 2, s"bad k=$k beam=$beam shrink=$shrink")
     val L = layers.length
+    val spark = batch.sparkSession
     val newRows = batch.select(col("vec_id"), col("embedding"))
+    // the batch's ids and level-rule hashes (no job for a local batch)
+    val ids = newRows.select(col("vec_id").cast("long"), xxhash64(col("vec_id"))).collect()
+      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)), r.getLong(1)))
     // loud micro-batch-sized guards instead of silent corruption: a
     // re-inserted (or batch-duplicated) id would union duplicate rows
     // into every layer it hashes to, and later walks/prunes would score
     // conflicting adjacencies for one id with no error anywhere. The
-    // presence check scans layer-0's full id column — corpus-linear — so
-    // callers that ALREADY screen the batch (hnswIngest's per-trigger
-    // dedupe + anti-join) pass validate = false and pay that scan once,
-    // not three times per trigger; direct callers keep the strict default.
+    // presence check is one shuffle-free scan of layer-0's id column —
+    // corpus-linear — so callers that ALREADY screen the batch
+    // (hnswIngest's per-trigger dedupe + anti-join) pass validate = false.
     if (validate) {
+      require(ids.map(_._1).distinct.length == ids.length, "insert batch contains duplicate vec_ids")
+      val known = ids.flatMap(_._1)
       require(
-        newRows.groupBy("vec_id").count().filter(col("count") > 1).isEmpty,
-        "insert batch contains duplicate vec_ids")
-      require(
-        newRows.join(layers.last.nodes.select("vec_id"), Seq("vec_id"), "left_semi").isEmpty,
+        known.isEmpty ||
+          gather(Seq(part(0, layers.last.nodes, in("vec_id", known), col("vec_id")))).isEmpty,
         "insert batch contains vec_ids already present in the stack")
     }
     val q = graft.CacheScope.track(
@@ -376,18 +410,11 @@ object Hnsw {
     // brute-scored top seeds, exactly like search (the top is
     // topCap-bounded by the build contract)
     var seeds = topSeeds(q, layers.head, perLayerK)
-    val spark = batch.sparkSession
-    // Phase 1 (SERIAL — each layer's walk is seeded by the previous
-    // layer's result, HNSW's descent): build and cache the per-layer
-    // walks, truncating the seed handoff. Phase 2 (CONCURRENT): the
-    // per-layer attach+repair blocks are independent once their walk is
-    // seeded — each pays two eager localCheckpoint jobs (`touched`,
-    // `ups`), and running the layers' blocks in parallel (guide §2.6)
-    // collapses L stacked launch floors into roughly one.
-    val walkedPerLayer = layers.zipWithIndex.map { case (layer, p) =>
+    // each layer's walk is seeded by the previous layer's result
+    val walked = layers.zipWithIndex.map { case (layer, p) =>
       // all batch rows walk every layer (they need the descent seeds);
       // rows whose hash clears this layer's modulus also attach here
-      val walked = graft.CacheScope.track(
+      val w = graft.CacheScope.track(
         GraphSearch
           .searchFrom(q, layer.graph, layer.nodes, seeds, k = candK, beam = beam, rounds = rounds)
           .cache())
@@ -397,86 +424,56 @@ object Hnsw {
       // depth (measured 73 s vs 16 s for the same 3-layer insert when a
       // rounds=2 walk — which never hits searchFrom's internal even-hop
       // truncation — left the cross-layer lineage intact)
-      seeds = walked.filter(col("rnk") <= perLayerK).select("query_id", "vec_id")
+      seeds = w.filter(col("rnk") <= perLayerK).select("query_id", "vec_id")
       if (p < L - 1) seeds = seeds.localCheckpoint()
-      (layer, p, walked)
+      w
     }
-    val grownWithDelta = graft.WorkPool.concurrently(
-      walkedPerLayer.map { case (layer, p, walked) => () =>
-      var mod = 1L
-      (0 until (L - 1 - p)).foreach(_ => mod *= shrink)
-      val joiners = newRows.filter(pmod(xxhash64(col("vec_id")), lit(mod)) === 0)
-      val allNodes = layer.nodes.select("vec_id", "embedding")
-        .unionByName(joiners.select("vec_id", "embedding"))
-      // attach: nearest k of the walk candidates — the walk already
-      // scored every candidate exactly against the new row's vector, so
-      // the rnk ≤ k prefix of the rnk ≤ candK result IS the top-k (the
-      // same prefix property knnGraphFor's degree views rely on)
-      val newOut = graft.CacheScope.track(
-        walked
-          .join(joiners.select(col("vec_id").as("query_id")), Seq("query_id"), "left_semi")
-          .filter(col("rnk") <= k)
-          .select(col("query_id").as("src"), col("vec_id").as("dst"), col("rnk"), col("dist2"))
-          .cache())
-      // repair: an old node that gained a reverse edge re-selects its
-      // nearest ≤ k over (its old edges ∪ the new arrivals) — the
-      // candidate list stays ≤ k + |reverse arrivals| rows, per-node
-      // bounded work on only the touched neighborhoods, and every
-      // candidate already carries its exact dist2 (graph edges from the
-      // build, arrivals from the walk; L2 is symmetric) — no re-scoring
-      val rev = newOut.select(col("dst").as("src"), col("src").as("dst"), col("dist2"))
-      // batch-sized and lineage-truncated: `touched` feeds the returned
-      // layer's anti-join, and lazily it would re-run the walk behind
-      // `newOut` after the per-trigger caches drop (CacheScope.scoped)
-      val touched = rev.select("src").distinct().localCheckpoint()
-      val touchedCands = layer.graph
-        .join(touched, Seq("src"), "left_semi")
-        .select("src", "dst", "dist2")
-        .unionByName(rev)
-      val touchedPruned = graft.vector.TopK
-        .perQuery(
-          touchedCands.select(
-            col("src").as("query_id"), col("dist2"), col("dst").as("vec_id")),
-          k)
-        .select(
-          col("query_id").as("src"), col("vec_id").as("dst"),
-          col("rank").as("rnk"), col("dist2"))
-      val untouched = layer.graph
-        .select("src", "dst", "rnk", "dist2")
-        .join(touched, Seq("src"), "left_anti")
-      // Only the BATCH-SIZED block is lineage-truncated: `ups` (the
-      // attach rows + touched-neighborhood repairs — |batch|·k-ish rows)
-      // embeds the walk plans whose re-analysis on every downstream
-      // action was the measured driver cost (~7 s per walk hop at 10×),
-      // so its eager localCheckpoint is the one materialization a
-      // mutation pays. The returned layer plans stay LAZY compositions
-      // of leaves — `parent.nodes ∪ joiners`, `(parent.graph anti
-      // touched) ∪ ups` — because the parents are themselves leaves
-      // (checkpointed artifacts, parquet scans, or prior epochs'
-      // folds), the anti-join side is batch-sized and broadcasts, and a
-      // flat union grows the plan by O(1) per epoch (the loadLog/LSM
-      // shape; compact/save re-bases it). The pre-round-21 form
-      // localCheckpointed allNodes AND the full grown graph — two
-      // CORPUS-SIZED materializations per layer per micro-batch, i.e.
-      // O(corpus) work per batch against the delta-log design's own
-      // batch-sized promise (and a corpus-wide repartition on top).
-      val ups = touchedPruned
-        .unionByName(newOut.select("src", "dst", "rnk", "dist2"))
-        .localCheckpoint()
-      val grownGraph = untouched.unionByName(ups)
-      if (wantDelta)
-        (Layer(allNodes, grownGraph),
-          Some(LayerDelta(
-            nodesAdded = joiners.select("vec_id", "embedding"),
-            nodesRemoved = emptyIdsDf(spark, "vec_id"),
-            graphUpserts = ups,
-            srcsRemoved = emptyIdsDf(spark, "src"))))
-      else
-        (Layer(allNodes, grownGraph), None)
+    val mods = layers.indices.map(p => (0 until (L - 1 - p)).foldLeft(1L)((m, _) => m * shrink))
+    // pmod(h, m) == 0 iff h % m == 0: the joiner filter's rule on the driver
+    val joins = mods.map(m => ids.collect { case (Some(id), h) if h % m == 0 => id }.toSet)
+    // attach: the walk already scored every candidate exactly against the
+    // new row's vector, so the rnk ≤ k prefix of its rnk ≤ candK result
+    // IS the top-k. Every layer's attach rows in one job.
+    val attached = gather(layers.indices.collect { case p if joins(p).nonEmpty =>
+      part(p, walked(p), col("rnk") <= k && in("query_id", joins(p)),
+        col("query_id").cast("long"), col("vec_id").cast("long"),
+        col("rnk").cast("int"), col("dist2").cast("double"))
     })
-    val grown = grownWithDelta.map(_._1)
-    warnIfTopOversized(grown.head.nodes.count(), topCap, "insert")
-    (grown, if (wantDelta) Some(grownWithDelta.map(_._2.get)) else None)
+    val newOut = layers.indices.map(p =>
+      attached(p).toSeq.map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))))
+    // repair: an old node that gained a reverse edge re-selects its
+    // nearest ≤ k over (its old edges ∪ the new arrivals), every candidate
+    // carrying its exact dist2 (L2 is symmetric) — no re-scoring. The
+    // touched nodes' edges (every layer) and the top's size in one job.
+    val touched = newOut.map(_.map(_._2).toSet)
+    val topTag = L
+    val current = gather(
+      layers.indices.collect { case p if touched(p).nonEmpty =>
+        part(p, layers(p).graph, in("src", touched(p)),
+          col("src").cast("long"), col("dst").cast("long"), col("dist2").cast("double"))
+      } :+ layers.head.nodes.select(lit(1)).rdd.mapPartitions(rows => Iterator(topTag -> Row(rows.size.toLong))))
+    val out = layers.zipWithIndex.map { case (layer, p) =>
+      val old = current(p).toSeq.filterNot(hasNull).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      val rev = newOut(p).map { case (s, d, _, x) => (d, s, x) }
+      // attach + repair rows as a local leaf; the returned layer plans stay
+      // LAZY compositions of leaves — `parent.nodes ∪ joiners`,
+      // `(parent.graph minus the touched srcs) ∪ ups` — so the plan grows
+      // by O(1) per epoch (the loadLog/LSM shape; compact/save re-bases it)
+      val ups = localEdges(spark, topKPerSrc(old ++ rev, k) ++ newOut(p))
+      val joiners = newRows.filter(pmod(xxhash64(col("vec_id")), lit(mods(p))) === 0)
+        .select("vec_id", "embedding")
+      (Layer(
+        layer.nodes.select("vec_id", "embedding").unionByName(joiners),
+        notIn(layer.graph.select("src", "dst", "rnk", "dist2"), "src", touched(p)).unionByName(ups)),
+        LayerDelta(
+          nodesAdded = joiners,
+          nodesRemoved = localIds(spark, "vec_id", Nil),
+          graphUpserts = ups,
+          srcsRemoved = localIds(spark, "src", Nil)))
+    }
+    val topN = current(topTag).map(_.getLong(0)).sum + ids.count { case (_, h) => h % mods.head == 0 }
+    warnIfTopOversized(topN, topCap, "insert")
+    (out.map(_._1), out.map(_._2))
   }
 
   /** Batch DELETE from a built layer stack — the reference's delete
@@ -531,27 +528,33 @@ object Hnsw {
     *    0.96 where the member budget measured 0.69; the gap is seed
     *    entry, not repair quality, and no repair closes it).
     *
-    * Unknown ids are a no-op (O9's contract). Work is bounded by the
-    * touched set: ≤ |deleted|·2k nodes × ≤ (2k)² clique-candidate
-    * edges per deleted id — nothing data-sized moves. Ids absent from a layer
+    * Unknown ids are a no-op (O9's contract). Ids absent from a layer
     * simply don't affect it (nesting keeps layers consistent because
-    * membership is a pure hash rule over surviving ids). Like
-    * [[insert]], only the batch-sized repaired block is materialized;
-    * the returned layers are lazy leaf compositions. Deleting the entire
-    * top layer leaves an empty top — callers deleting at that scale
-    * should rebuild instead (documented, not guarded: the hash rule
-    * makes it astronomically unlikely below a mass purge). */
+    * membership is a pure hash rule over surviving ids).
+    *
+    * Scale shape: the repair runs on the driver over the touched set,
+    * ≤ |deleted|·2k nodes × ≤ (2k)² clique-candidate edges per deleted
+    * id. Three shuffle-free jobs, each over every layer at once, gather
+    * it: the edges with a deleted src or dst; the touched survivors'
+    * out-edges and embeddings; the embeddings of their candidates' other
+    * ends. Candidates are scored with `L2Squared`'s arithmetic and
+    * ranked by [[graft.vector.TopKAgg]]'s rule, and each layer's repaired
+    * block comes back as a local leaf; the returned layers are lazy leaf
+    * compositions. The gathered embeddings must fit the driver budget
+    * IVF's local build uses (`KMeans.localFitThreshold` floats); past it
+    * the delete fails loudly. Mass purges — deleting the entire top
+    * layer leaves an empty top — should rebuild instead. */
   def delete(
       layers: Seq[Layer],
       ids: DataFrame,
       k: Int): Seq[Layer] =
-    deleteImpl(layers, ids, k, wantDelta = false)._1
+    deleteWithDelta(layers, ids, k)._1
 
   /** [[delete]] that ALSO returns the per-layer [[LayerDelta]] for
     * [[saveDelta]]'s durability log: `nodesRemoved` is the requested id
     * list (replay's anti-join keeps unknown ids a no-op, O9's contract),
-    * `graphUpserts` the repaired survivors' new adjacency (eagerly
-    * materialized so persistence never re-runs the repair), and
+    * `graphUpserts` the repaired survivors' new adjacency (a local leaf,
+    * so persistence never re-runs the repair), and
     * `srcsRemoved` the deleted srcs plus every touched survivor — a
     * superset of the upserted srcs, so a survivor whose repair left it
     * edgeless still drops its stale rows on replay. */
@@ -559,84 +562,80 @@ object Hnsw {
       layers: Seq[Layer],
       ids: DataFrame,
       k: Int): (Seq[Layer], Seq[LayerDelta]) = {
-    val (st, d) = deleteImpl(layers, ids, k, wantDelta = true)
-    (st, d.get)
-  }
-
-  private def deleteImpl(
-      layers: Seq[Layer],
-      ids: DataFrame,
-      k: Int,
-      wantDelta: Boolean): (Seq[Layer], Option[Seq[LayerDelta]]) = {
     require(layers.nonEmpty, "empty layer stack")
     require(k >= 1, s"k must be >= 1, got $k")
-    val del = graft.CacheScope.track(ids.select(col("vec_id")).distinct().cache())
-    // per-layer repair blocks are fully INDEPENDENT (no cross-layer
-    // dependency — membership is the pure hash rule), and each pays two
-    // eager localCheckpoint jobs (`touched`, `ups`); run the layers
-    // concurrently (guide §2.6) so a delete's wall is one layer's worth
-    // of launch floor, not L stacked serially
-    val outWithDelta = graft.WorkPool.concurrently(layers.map { layer => () =>
-      val survivors = layer.nodes.join(del, Seq("vec_id"), "left_anti")
-      val g = layer.graph.select("src", "dst")
-      val delSrc = del.select(col("vec_id").as("src"))
-      val delDst = del.select(col("vec_id").as("dst"))
-      // edges whose src survives
-      val keptSrc = g.join(delSrc, Seq("src"), "left_anti")
-      // each deleted node's UNDIRECTED surviving neighborhood (d, x)
-      val delOut = g.join(delSrc, Seq("src"), "left_semi")
-      val nbr = delOut.select(col("src").as("d"), col("dst").as("x"))
-        .unionByName(
-          keptSrc.join(delDst, Seq("dst"), "left_semi")
-            .select(col("dst").as("d"), col("src").as("x")))
-        .join(del.select(col("vec_id").as("x")), Seq("x"), "left_anti")
-      // batch-sized and lineage-truncated (insertImpl's rule): the
-      // returned layer's anti-join must not re-run the neighborhood
-      // scan after the per-trigger `del` cache drops
-      val touched = nbr.select(col("x").as("src")).distinct().localCheckpoint()
-      // local clique over each hole's neighborhood: ≤ (2k)² bounded pairs
-      // per deleted id through one equality join on the deleted key
-      val clique = nbr.as("a")
-        .join(nbr.as("b"), col("a.d") === col("b.d"))
-        .select(col("a.x").as("src"), col("b.x").as("dst"))
-      val repairCands = keptSrc
-        .join(touched, Seq("src"), "left_semi")
-        .unionByName(clique)
-        .join(delDst, Seq("dst"), "left_anti")
-        .filter(col("src") =!= col("dst"))
-      val emb = survivors.select(col("vec_id"), col("embedding"))
-      val repaired = graft.vector.TopK.perQuery(
-        repairCands.distinct()
-          .join(emb.select(col("vec_id").as("src"), col("embedding").as("emb_s")), Seq("src"))
-          .join(emb.select(col("vec_id").as("dst"), col("embedding").as("emb_d")), Seq("dst"))
-          .select(
-            col("src").as("query_id"),
-            graft.vector.VectorOps.l2Sq(col("emb_s"), col("emb_d")).as("dist2"),
-            col("dst").as("vec_id")),
-        k)
-        .select(col("query_id").as("src"), col("vec_id").as("dst"), col("rank").as("rnk"), col("dist2"))
-      val untouched = layer.graph
-        .select("src", "dst", "rnk", "dist2")
-        .join(delSrc, Seq("src"), "left_anti")
-        .join(touched, Seq("src"), "left_anti")
-      // insertImpl's truncation rule: only the batch-sized repaired
-      // block is checkpointed (it embeds the clique-repair joins); the
-      // layer plans stay lazy leaf compositions — the touched-set
-      // anti-joins broadcast, and the old survivors/graph checkpoints
-      // were two corpus-sized materializations per layer per delete.
-      val ups = repaired.localCheckpoint()
-      val shrunkGraph = untouched.unionByName(ups)
-      if (wantDelta)
-        (Layer(survivors, shrunkGraph),
-          Some(LayerDelta(
-            nodesAdded = emptyNodesDf(layer.nodes.sparkSession),
-            nodesRemoved = del.select("vec_id"),
-            graphUpserts = ups,
-            srcsRemoved = delSrc.unionByName(touched))))
-      else
-        (Layer(survivors, shrunkGraph), None)
+    val L = layers.length
+    val spark = ids.sparkSession
+    // the requested ids, distinct, on the driver (no job for a local list)
+    val idCol = ids.select(col("vec_id").cast("long"))
+    val del: Seq[java.lang.Long] = idCol.collect().toSeq
+      .map(r => if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))).distinct
+    val nullable = idCol.schema.head.nullable
+    val gone = del.filter(_ != null).map(_.longValue).toSet
+    // 1. every edge with a deleted src or dst, every layer in one job: each
+    //    hole's UNDIRECTED surviving neighbourhood, as (hole, survivor) pairs
+    val holeEdges = gather(if (gone.isEmpty) Nil else layers.indices.map(l =>
+      part(l, layers(l).graph, in("src", gone) || in("dst", gone),
+        col("src").cast("long"), col("dst").cast("long"))))
+    val nbr = layers.indices.map(l => holeEdges(l).toSeq.filterNot(hasNull).flatMap { r =>
+      val (s, d) = (r.getLong(0), r.getLong(1))
+      if (gone(s) && !gone(d)) Some(s -> d) else if (!gone(s) && gone(d)) Some(d -> s) else None
     })
-    (outWithDelta.map(_._1), if (wantDelta) Some(outWithDelta.map(_._2.get)) else None)
+    val touched = nbr.map(_.map(_._2).toSet)
+    // 2. the touched survivors' out-edges and embeddings, one job
+    val around = gather(layers.indices.filter(touched(_).nonEmpty).flatMap { l =>
+      Seq(
+        part(l, layers(l).graph, in("src", touched(l)), col("src").cast("long"), col("dst").cast("long")),
+        part(L + l, layers(l).nodes, in("vec_id", touched(l)), col("vec_id").cast("long"), col("embedding")))
+    })
+    // repair candidates: each touched survivor's kept edges ∪ the local
+    // clique over each hole's neighbourhood (≤ (2k)² pairs per hole), minus
+    // deleted ids and self-pairs
+    val cands = layers.indices.map { l =>
+      val kept = around(l).toSeq.filterNot(hasNull).map(r => (r.getLong(0), r.getLong(1))).filterNot(e => gone(e._2))
+      val clique = nbr(l).groupBy(_._1).values.flatMap { ps =>
+        val xs = ps.map(_._2).distinct
+        for (a <- xs; b <- xs) yield (a, b)
+      }
+      (kept ++ clique).filter { case (a, b) => a != b }.distinct
+    }
+    def embeddings(rows: Array[Row]): Map[Long, Seq[Array[Float]]] =
+      rows.toSeq.filterNot(hasNull).groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getSeq[Float](1).toArray) }
+    val embs0 = layers.indices.map(l => embeddings(around(L + l)))
+    // 3. the embeddings of the candidates' other ends, one job — the
+    //    driver holds at most the existing budget of gathered floats
+    val need = layers.indices.map(l => cands(l).map(_._2).filterNot(touched(l)).toSet)
+    val dim = embs0.iterator.flatMap(_.valuesIterator.flatten).map(_.length).foldLeft(1)(math.max)
+    val nEmb = embs0.map(_.valuesIterator.map(_.length).sum).sum.toLong + need.map(_.size).sum
+    require(nEmb * dim <= KMeans.localFitThreshold,
+      s"Hnsw.delete of a ${gone.size}-id batch repairs through $nEmb embeddings of $dim floats, " +
+        s"past the driver budget of ${KMeans.localFitThreshold} floats; delete in smaller " +
+        "batches, or rebuild the stack for a mass purge")
+    val far = gather(layers.indices.collect { case l if need(l).nonEmpty =>
+      part(l, layers(l).nodes, in("vec_id", need(l)), col("vec_id").cast("long"), col("embedding"))
+    })
+    val out = layers.zipWithIndex.map { case (layer, l) =>
+      val emb = embs0(l) ++ embeddings(far(l))
+      // touched nodes re-select their nearest ≤ k by L2Squared's arithmetic
+      // (a length mismatch is NULL there, so no candidate); a pair missing
+      // an embedding on either side drops, as an inner join drops it
+      val scored = for {
+        (s, d) <- cands(l)
+        es <- emb.getOrElse(s, Nil)
+        ed <- emb.getOrElse(d, Nil)
+        if es.length == ed.length
+      } yield (s, d, VectorOps.l2Sq(es, ed))
+      val ups = localEdges(spark, topKPerSrc(scored, k))
+      (Layer(
+        notIn(layer.nodes, "vec_id", gone),
+        notIn(layer.graph.select("src", "dst", "rnk", "dist2"), "src", gone ++ touched(l)).unionByName(ups)),
+        LayerDelta(
+          nodesAdded = emptyNodesDf(spark),
+          nodesRemoved = localIds(spark, "vec_id", del, nullable),
+          graphUpserts = ups,
+          srcsRemoved = localIds(spark, "src", del ++ touched(l).toSeq.sorted.map(Long.box), nullable)))
+    }
+    (out.map(_._1), out.map(_._2))
   }
 
   /** Re-bound an oversized top — the cheap maintenance move the

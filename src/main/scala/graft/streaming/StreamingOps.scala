@@ -186,9 +186,10 @@ object StreamingOps {
             .join(cur.last.nodes.select("vec_id"), Seq("vec_id"), "left_anti")
             .localCheckpoint()
           if (!fresh.isEmpty) {
-            // scoped: insert's returned layers are eagerly
-            // localCheckpoint'd, so dropping its tracked per-trigger
-            // caches on exit is safe — and mandatory for a long stream
+            // scoped: insert's returned layers hold its repaired rows as
+            // local leaves, not its walks, so dropping its tracked
+            // per-trigger caches on exit is safe — and mandatory for a
+            // long stream
             val next = onDelta match {
               case Some(f) =>
                 // the delta path: batch-sized durability — persist the

@@ -611,4 +611,138 @@ class HnswSpec extends SparkSpec {
       assert(gDiff == 0, s"trial $trial: edge multisets diverge (diff $gDiff)")
     }
   }
+
+  test("a write costs the batch: deleteWithDelta runs no shuffle, both writes stay within their job budgets") {
+    // Budgets are the counts the driver repair kernel runs on this fixture
+    // (they repeat run to run). Delete gathers the hole edges, the touched
+    // survivors' edges and embeddings, and their neighbours' embeddings:
+    // three shuffle-free jobs for any stack depth. Insert adds the batch-id
+    // collect, the presence scan, the attach gather and the repair gather
+    // to its walks. The per-layer join repair ran 83 and 126 jobs here, and
+    // its delete shuffled 17,666 bytes.
+    val layers = Hnsw.build(emb, k = 6, shrink = 16, topCap = 256L)
+      .map(l => Hnsw.Layer(l.nodes.localCheckpoint(), l.graph.localCheckpoint()))
+    val batch = emb.filter(col("vec_id") < 5)
+      .select(
+        (col("vec_id") + 940000000L).as("vec_id"),
+        transform(col("embedding"), x => x + lit(0.001f)).as("embedding"))
+    val ((afterIns, dIns), insertJobs, _) =
+      costOf(Hnsw.insertWithDelta(layers, batch, k = 6, beam = 16, rounds = 6))
+    val delIds = Seq(0L, 1L, 940000002L, 123456789L).toDF("vec_id")
+    val ((afterDel, dDel), deleteJobs, deleteBytes) = costOf(Hnsw.deleteWithDelta(afterIns, delIds, k = 6))
+    info(s"insertWithDelta: $insertJobs jobs; deleteWithDelta: $deleteJobs jobs, $deleteBytes shuffle bytes")
+    assert(dIns.last.nodesAdded.count() == 5L && dDel.last.nodesRemoved.count() == 4L)
+    assert(afterDel.last.nodes.count() == emb.count() + 2L)
+    assert(deleteBytes == 0L, s"deleteWithDelta shuffled $deleteBytes bytes")
+    assert(deleteJobs <= 3, s"deleteWithDelta ran $deleteJobs jobs")
+    assert(insertJobs <= 71, s"insertWithDelta ran $insertJobs jobs")
+  }
+
+  private def l2(a: Array[Float], b: Array[Float]): Double =
+    a.indices.map { i => val d = a(i).toDouble - b(i); d * d }.sum
+
+  /** Ascending (dist2, dst), duplicates kept, the first `k`, ranked. */
+  private def nearest(src: Long, cands: Seq[(Long, Double)], k: Int): Seq[(Long, Long, Int, Double)] =
+    cands.sortBy { case (d, x) => (x, d) }.take(k).zipWithIndex.map { case ((d, x), i) => (src, d, i + 1, x) }
+
+  private def edgeRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Int, Double)] =
+    df.select("src", "dst", "rnk", "dist2").as[(Long, Long, Int, Double)].collect().toSeq.sorted
+
+  private def idRows(df: org.apache.spark.sql.DataFrame): Seq[Long] = df.as[Long].collect().toSeq.sorted
+
+  /** A 2-layer toy stack (top first) whose layers the walks cover
+    * exhaustively: layer 0 is {1..8} in two components, with an edge to a
+    * missing node 99; the top is {1, 2, 3, 7}. Stored distances are exact
+    * (binary fractions), except the 5 → 99 edge's, which has no embedding
+    * to score. */
+  private lazy val toy: (Seq[Hnsw.Layer], Map[Long, Array[Float]]) = {
+    val v = Map(
+      1L -> Array(0f, 0f), 2L -> Array(2f, 0f), 3L -> Array(1f, 0f), 4L -> Array(2f, 1f),
+      5L -> Array(2f, -1f), 6L -> Array(10f, 10f), 7L -> Array(4f, 0f), 8L -> Array(11f, 10f))
+    def layer(ids: Seq[Long], edges: Seq[(Long, Long)]) = {
+      val ranked = edges.groupBy(_._1).toSeq.flatMap { case (s, es) =>
+        es.map { case (_, d) => (d, v.get(d).map(l2(v(s), _)).getOrElse(0.5)) }
+          .sortBy(_.swap).zipWithIndex.map { case ((d, x), i) => (s, d, i + 1, x) }
+      }
+      Hnsw.Layer(ids.map(i => (i, v(i).toSeq)).toDF("vec_id", "embedding"), ranked.toDF("src", "dst", "rnk", "dist2"))
+    }
+    (Seq(
+      layer(Seq(1L, 2L, 3L, 7L), Seq(1L -> 3L, 1L -> 2L, 2L -> 3L, 2L -> 7L, 3L -> 1L, 3L -> 2L, 7L -> 2L, 7L -> 3L)),
+      layer(1L to 8L, Seq(1L -> 2L, 1L -> 4L, 2L -> 3L, 2L -> 4L, 3L -> 2L, 3L -> 7L, 4L -> 2L, 4L -> 5L,
+        5L -> 2L, 5L -> 99L, 6L -> 8L, 7L -> 3L, 7L -> 4L, 8L -> 6L))),
+      v)
+  }
+
+  test("driver repair kernel equals a pure-Scala replay of the repair rule on a toy stack") {
+    val (layers, v) = toy
+    val k = 2
+    val graphs = layers.map(_.graph.select("src", "dst", "rnk", "dist2").as[(Long, Long, Int, Double)].collect().toSeq)
+    val members = layers.map(_.nodes.select("vec_id").as[Long].collect().toSet)
+
+    // delete: 2 leaves both layers, 6 only layer 0, 77 is unknown
+    val gone = Set(2L, 6L, 77L)
+    val (_, dDel) = Hnsw.deleteWithDelta(layers, gone.toSeq.toDF("vec_id"), k)
+    layers.indices.foreach { l =>
+      val g = graphs(l).map(e => (e._1, e._2))
+      val nbr = g.collect {
+        case (s, d) if gone(s) && !gone(d) => (s, d)
+        case (s, d) if !gone(s) && gone(d) => (d, s)
+      }
+      val touched = nbr.map(_._2).toSet
+      val clique = nbr.groupBy(_._1).values.flatMap(ps => for (a <- ps; b <- ps) yield (a._2, b._2))
+      val cands = (g.filter(e => touched(e._1) && !gone(e._2)) ++ clique).filter(e => e._1 != e._2).distinct
+      val emb = v.filter { case (id, _) => members(l)(id) && !gone(id) }
+      val want = touched.toSeq.flatMap { t =>
+        nearest(t, cands.filter(_._1 == t).collect { case (_, d) if emb.contains(d) && emb.contains(t) => (d, l2(emb(t), emb(d))) }, k)
+      }.sorted
+      assert(edgeRows(dDel(l).graphUpserts) == want, s"delete layer $l upserts")
+      assert(idRows(dDel(l).srcsRemoved) == (gone ++ touched).toSeq.sorted, s"delete layer $l srcsRemoved")
+      assert(idRows(dDel(l).nodesRemoved) == gone.toSeq.sorted)
+    }
+    // the crafted cases hold the properties they were built for: 1's repair
+    // ties 4 and 5 at 5.0 for its last slot and keeps the lower id; 5's
+    // edge to the missing 99 drops; 8, whose only neighbour was 6, is
+    // removed with no upsert
+    val l0 = edgeRows(dDel(1).graphUpserts)
+    assert(l0.filter(_._1 == 1L) == Seq((1L, 3L, 1, 1.0), (1L, 4L, 2, 5.0)))
+    assert(l0.filter(_._1 == 5L).map(_._2) == Seq(3L, 4L))
+    assert(!l0.exists(_._1 == 8L) && idRows(dDel(1).srcsRemoved).contains(8L))
+
+    // insert: one batch row joins the top layer (shrink 2), one only layer 0
+    val byHash = spark.range(1000L, 1100L).select(col("id"), pmod(xxhash64(col("id")), lit(2L)).as("m"))
+      .as[(Long, Long)].collect()
+    val (top, low) = (byHash.find(_._2 == 0L).get._1, byHash.find(_._2 != 0L).get._1)
+    val batch = Seq(top -> Array(2f, -0.75f), low -> Array(0.25f, 0.25f))
+    val (_, dIns) = Hnsw.insertWithDelta(
+      layers, batch.map { case (i, e) => (i, e.toSeq) }.toDF("vec_id", "embedding"), k, beam = 16, rounds = 6, shrink = 2)
+    layers.indices.foreach { l =>
+      val joiners = if (l == 0) batch.take(1) else batch
+      // the walk covers the toy layer, so a joiner's attach edges are its
+      // exact nearest k members
+      val newOut = joiners.flatMap { case (j, e) =>
+        nearest(j, members(l).toSeq.map(x => (x, l2(e, v(x)))), k)
+      }
+      val touched = newOut.map(_._2).toSet
+      val repaired = touched.toSeq.flatMap { t =>
+        nearest(t, graphs(l).collect { case (`t`, d, _, x) => (d, x) } ++
+          newOut.collect { case (j, `t`, _, x) => (j, x) }, k)
+      }
+      assert(edgeRows(dIns(l).graphUpserts) == (repaired ++ newOut).sorted, s"insert layer $l upserts")
+      assert(idRows(dIns(l).srcsRemoved).isEmpty)
+      assert(idRows(dIns(l).nodesAdded.select("vec_id")) == joiners.map(_._1).sorted)
+    }
+    assert(edgeRows(dIns(0).graphUpserts).exists(_._1 == top), "the top-level batch row did not attach at the top")
+    // 5 keeps its stored edge to the missing 99 (insert does not re-score)
+    assert(edgeRows(dIns(1).graphUpserts).filter(_._1 == 5L).sortBy(_._3).map(_._2) == Seq(top, 99L))
+  }
+
+  test("delete past the driver budget fails loudly, naming the batch and the bound") {
+    val saved = graft.vector.KMeans.localFitThreshold
+    graft.vector.KMeans.localFitThreshold = 8L
+    try {
+      val e = intercept[IllegalArgumentException](
+        Hnsw.deleteWithDelta(toy._1, Seq(2L, 6L).toDF("vec_id"), k = 2))
+      assert(e.getMessage.contains("2-id batch") && e.getMessage.contains("budget of 8 floats"), e.getMessage)
+    } finally graft.vector.KMeans.localFitThreshold = saved
+  }
 }

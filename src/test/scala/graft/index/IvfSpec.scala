@@ -263,45 +263,6 @@ class IvfSpec extends SparkSpec {
     assert(routedPids(IvfMutate.insert(model, scaled.toDF("vec_id", "embedding")), 800000L) == replay(model, scaled))
   }
 
-  /** Spark jobs started by `body` on this thread (and the threads it
-    * spawns) and the shuffle bytes (read + written) of their tasks, counted
-    * by a listener keyed on a local property. A sentinel job drains the
-    * listener bus: events of one queue arrive in order. */
-  private def costOf[T](body: => T): (T, Int, Long) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-    val sc = spark.sparkContext
-    val key = "graft.test.jobTag"
-    val tag = s"jobs-${System.nanoTime()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val stageBytes = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach { t =>
-          seen.add(t)
-          if (t == tag) e.stageIds.foreach(stages.add)
-        }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        Option(e.taskMetrics).foreach { m =>
-          stageBytes.add(e.stageId -> (m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten))
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      val out = try body finally sc.setLocalProperty(key, s"$tag-end")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(s"$tag-end") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(s"$tag-end"), "listener bus did not drain")
-      val bytes = stageBytes.toArray.collect { case (st: Int, b: Long) if stages.contains(st) => b }.sum
-      (out, seen.toArray.count(_ == tag), bytes)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("a write costs the batch: insert + checkpoint and delete + checkpoint stay within their job budgets") {
     // Budgets are the counts the batch-sized write path runs (they repeat
     // run to run): insert is the route-pair collect plus one stats pass over
