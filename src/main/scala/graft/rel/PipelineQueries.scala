@@ -3607,9 +3607,9 @@ object PipelineQueries {
 
     // Star-contraction closure driver-visible AND hash-checked on the
     // graph class that MOTIVATES it: planted 100-node chains (one per
-    // consecutive doc_id century), diameter 99 — min-label propagation's
-    // default 25-round bound cannot close these, the O(log² n)
-    // large-star/small-star alternation does. The oracle states the
+    // consecutive doc_id century), diameter 99 — min-label propagation
+    // would need about 100 rounds to close these, the O(log² n)
+    // large-star/small-star alternation needs far fewer. The oracle states the
     // ground truth arithmetically (component = the century, comp = its
     // minimum id), so hash-green certifies full closure of every chain.
     NamedQuery(

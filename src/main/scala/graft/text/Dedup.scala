@@ -856,63 +856,49 @@ object Dedup {
     * sketch missed A~C, pairwise keep-the-smaller logic keeps both A and C.
     *
     * Min-label propagation: every vertex starts as its own label, each
-    * iteration takes the min label over itself and its neighbors, fixpoint
-    * when no label changes. Each iteration is one equi-join + one groupBy
-    * shuffle over the EDGE list — never an all-pairs product — and labels
-    * are `localCheckpoint`ed per iteration so lineage stays flat (the
-    * replay's sliver-partition lesson). Convergence needs O(component
-    * diameter) iterations: near-dup clusters are shallow (dup chains are
-    * short), so the default bound is generous; for adversarial
-    * million-link chains switch to the star-contraction variant before
-    * raising `maxIter`.
+    * round takes the min label over itself and its neighbors — one
+    * equi-join + one groupBy shuffle over the EDGE list, never an
+    * all-pairs product — until no label changes. The rounds run through
+    * [[graft.rel.Iterate.untilFixpoint]], which stores the labels every
+    * round so lineage stays flat. Labels only decrease, so it stops within
+    * diameter + 1 rounds: rounds grow with component diameter. Near-dup
+    * clusters are shallow; on deep chains [[connectedComponentsStar]]
+    * needs fewer rounds.
     *
     * @param pairs `(id_a long, id_b long)` undirected edges
     * @return (id long, comp long) — one row per distinct endpoint
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     val edges = graft.CacheScope.track(
       pairs
         .select(col("id_a").as("src"), col("id_b").as("dst"))
         .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
         .distinct()
         .cache())
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("comp"))
-      .localCheckpoint(true)
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
+    val init = edges.select(col("src").as("id")).distinct().select(col("id"), col("id").as("comp"))
+    graft.rel.Iterate.untilFixpoint(init) { labels =>
       val viaNeighbors = edges
         .join(labels.select(col("id").as("src"), col("comp")), "src")
         .select(col("dst").as("id"), col("comp"), lit(false).as("own"))
-      // Each id's single `own` row carries its PREVIOUS label through the
-      // same aggregate that computes the new one (`prev` = the one own
-      // row's comp), so convergence detection needs no join-back against
-      // the previous frame — the probe is a single tiny agg over the
-      // checkpointed result instead of a per-iteration equi-join pass.
-      val next = labels.select(col("id"), col("comp"), lit(true).as("own"))
+      // Each id's single `own` row carries its PREVIOUS label (`prev`)
+      // through the aggregate that computes the new one, so the change
+      // flag needs no join-back against the previous labels.
+      labels.select(col("id"), col("comp"), lit(true).as("own"))
         .unionByName(viaNeighbors)
         .groupBy("id")
         .agg(min("comp").as("comp"), max(when(col("own"), col("comp"))).as("prev"))
-        .localCheckpoint(true)
-      converged = !next
-        .agg(coalesce(max(col("comp") =!= col("prev")), lit(false)))
-        .head().getBoolean(0)
-      labels = next.select("id", "comp")
-      it += 1
+        .select(col("id"), col("comp"), (col("comp") =!= col("prev")).as("changed"))
     }
-    labels
   }
 
   /** Star-contraction connected components — the alternating large-star /
     * small-star algorithm (Kiveris, Lattanzi, Mirrokni, Rastogi & Vassilvitskii,
     * "Connected Components in MapReduce and Beyond", SoCC 2014): converges
-    * in O(log² n) ROUNDS REGARDLESS OF COMPONENT DIAMETER, which is the
-    * escape hatch [[connectedComponents]]'s contract names for adversarial
-    * deep-chain graphs, where min-label propagation needs O(diameter)
-    * rounds (a million-link chain = a million shuffles). Each round is two
-    * edge-keyed aggregate+join passes — the same per-round shuffle budget
-    * as one propagation step, so the crossover is purely about diameter.
+    * in O(log² n) ROUNDS REGARDLESS OF COMPONENT DIAMETER, where
+    * [[connectedComponents]] needs O(diameter) rounds (a million-link chain
+    * = a million shuffles). Each round is two edge-keyed aggregate+join
+    * passes, about twice a propagation round, so star pays off only on
+    * deep chains.
     *
     *  - large-star: every node attaches its STRICTLY GREATER neighbors to
     *    the minimum of its closed neighborhood;
@@ -922,66 +908,50 @@ object Dedup {
     * Fixpoint: the edge set stops changing, at which point edges form
     * disjoint stars rooted at each component's minimum id. Output contract
     * identical to [[connectedComponents]] (`(id, comp)`, one row per
-    * distinct endpoint) — property-tested equal on random graphs, and the
-    * deep-chain case the propagation variant cannot finish inside its
-    * default bound is spec-pinned.
+    * distinct endpoint) — property-tested equal on random graphs, and a
+    * 200-node chain is spec-pinned.
     */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    val nodes = graft.CacheScope.track(
-      pairs.select(col("id_a").as("id"))
-        .union(pairs.select(col("id_b").as("id")))
-        .distinct()
-        .cache())
-    var edges = pairs
+  def connectedComponentsStar(pairs: DataFrame): DataFrame = {
+    // state: the live edges (`kept`), high → low, plus for one round the
+    // edges the last round dropped
+    val init = pairs
       .select(col("id_a").as("u"), col("id_b").as("v"))
       .filter(col("u") =!= col("v"))
-      .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
+      .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"), lit(true).as("kept"))
       .distinct()
-      .localCheckpoint(true)
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
+    val stars = graft.rel.Iterate.untilFixpoint(init) { state =>
+      val edges = state.filter(col("kept")).select("u", "v")
       // large-star over the symmetric view: m(u) = min(N(u) ∪ {u});
       // emit (v, m(u)) for v ∈ N(u), v > u
       val sym = edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
       val mins = sym.groupBy("u").agg(least(min(col("v")), first(col("u"))).as("m"))
+      // m(u) ≤ u < v, so each emitted edge already runs high → low; its
+      // duplicates are dropped by the round's one distinct below
       val afterLarge = sym
         .join(mins, "u")
         .filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-      // small-star over high→low orientation: m(u) = min(N≤(u) ∪ {u}) =
-      // min(v); emit (x, m) for x ∈ N≤(u) ∪ {u}, x ≠ m
-      val oriented = afterLarge
-        .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-      val sMins = oriented.groupBy("u").agg(min(col("v")).as("m"))
-      val next = oriented
+      // small-star: m(u) = min(N≤(u) ∪ {u}) = min(v); emit (x, m) for
+      // x ∈ N≤(u) ∪ {u}, x ≠ m (each u has a row per ≤-neighbor)
+      val sMins = afterLarge.groupBy("u").agg(min(col("v")).as("m"))
+      // that distinct is also the round's fixpoint test: group the emitted
+      // edges with the live ones, keep the emitted, flag those on one side
+      afterLarge
         .join(sMins, "u")
-        .select(col("v").as("x"), col("m"))
-        .unionByName(sMins.select(col("u").as("x"), col("m")))
-        .filter(col("x") =!= col("m"))
-        .select(col("x").as("u"), col("m").as("v"))
-        .distinct()
-        .localCheckpoint(true)
-      // fixpoint = edge set unchanged; both frames are checkpointed, so
-      // the symmetric-difference probe reads materialized rows only
-      // ONE signed-count symmetric-difference pass (both sets are
-      // distinct'd, so counts are ±1 and cancel exactly when the sets
-      // match) — replacing the two exceptAll jobs the probe used to
-      // cost per round.
-      converged = next.select(col("u"), col("v"), lit(1L).as("_t"))
-        .unionByName(edges.select(col("u"), col("v"), lit(-1L).as("_t")))
+        .select(explode(array(col("u"), col("v"))).as("u"), col("m").as("v"), lit(true).as("new"))
+        .filter(col("u") =!= col("v"))
+        .unionByName(edges.select(col("u"), col("v"), lit(false).as("new")))
         .groupBy("u", "v")
-        .agg(sum("_t").as("_d"))
-        .filter(col("_d") =!= 0L)
-        .isEmpty
-      edges = next
-      it += 1
+        .agg(max("new").as("kept"), min("new").as("lo"))
+        .select(col("u"), col("v"), col("kept"), (col("kept") === col("lo")).as("changed"))
     }
-    // stars: (child u → root v); roots and isolated nodes label themselves
-    nodes
-      .join(edges.select(col("u").as("id"), col("v").as("comp")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
+    // each node's root is the min over its star edge (child → root, high →
+    // low) and itself. An aggregate, not a join: the stored stars carry no
+    // size estimate to broadcast them by, so a join would shuffle both sides.
+    val ids = pairs.select(explode(array(col("id_a"), col("id_b"))).as("id"))
+    stars.filter(col("kept")).select(col("u").as("id"), col("v").as("comp"))
+      .unionByName(ids.select(col("id"), col("id").as("comp")))
+      .groupBy("id")
+      .agg(min("comp").as("comp"))
   }
 }

@@ -174,9 +174,9 @@ class TextSpec extends SparkSpec {
     val propR = Dedup.connectedComponents(rnd).as[(Long, Long)].collect().toSet
     val starR = Dedup.connectedComponentsStar(rnd).as[(Long, Long)].collect().toSet
     assert(starR == propR)
-    // the case the propagation contract EXCLUDES at its default bound: a
-    // 200-node chain (diameter 199 > 25 rounds). Star contraction closes
-    // it in O(log² n) rounds — every node labels to the chain's minimum.
+    // a 200-node chain (diameter 199): propagation closes it too, but only
+    // in O(diameter) rounds (about 200); star contraction closes it in
+    // O(log² n) rounds — every node labels to the chain's minimum.
     val chain = (0 until 199).map(i => (1000L + i, 1001L + i)).toDF("id_a", "id_b")
     val starC = Dedup.connectedComponentsStar(chain).as[(Long, Long)].collect()
     assert(starC.length == 200)
@@ -194,6 +194,34 @@ class TextSpec extends SparkSpec {
     assert(Seq(10L, 11L, 12L).forall(comp(_) == 10L))
     assert(comp(20L) == 20L && comp(21L) == 20L)
     assert(comp.size == 9)
+  }
+
+  test("connectedComponents closes a chain deeper than any fixed round bound") {
+    // diameter 39: node min + d reads min only after d rounds, so any round
+    // bound below 39 leaves the chain's tail labelled above its minimum
+    val chain = (0 until 39).map(i => (500L + i, 501L + i)).toDF("id_a", "id_b")
+    val comp = Dedup.connectedComponents(chain).as[(Long, Long)].collect()
+    assert(comp.length == 40)
+    val wrong = comp.filter(_._2 != 500L)
+    assert(wrong.isEmpty, s"not labelled with the chain's minimum: ${wrong.sorted.mkString(", ")}")
+  }
+
+  test("both connected-components operators run a pinned number of jobs on the mixed fixture") {
+    // chain 101-104, triangle, isolated pair: 4 propagation rounds, 3 star
+    // rounds, each one store job that also counts the changed rows. The ids
+    // differ from the other tests' fixtures, so no cached edge list of
+    // theirs is reused and the count does not depend on test order.
+    val pairs = Seq(
+      (101L, 102L), (102L, 103L), (103L, 104L), (110L, 111L), (111L, 112L), (110L, 112L), (120L, 121L))
+      .toDF("id_a", "id_b")
+    graft.CacheScope.scoped {
+      val (prop, propJobs, _) = costOf(Dedup.connectedComponents(pairs).as[(Long, Long)].collect())
+      val (star, starJobs, _) = costOf(Dedup.connectedComponentsStar(pairs).as[(Long, Long)].collect())
+      info(s"connectedComponents: $propJobs jobs; connectedComponentsStar: $starJobs jobs")
+      assert(prop.toSet == star.toSet)
+      assert(propJobs == 17, s"connectedComponents ran $propJobs jobs")
+      assert(starJobs == 27, s"connectedComponentsStar ran $starJobs jobs")
+    }
   }
 
   test("connectedComponents matches a BFS reference on a pseudo-random graph") {
